@@ -1,18 +1,30 @@
 """Spark jobs: encode a DataFrame into the stripes table, decode it back,
-and the persistent form with manifest + lineage/checkpoint + resume.
+and the persistent table (stripes + manifest + lineage) with commit,
+idempotent resume, time travel and compaction.
 
-Execution model (SURVEY.md §3.4):
+Execution model:
 
     ENCODE: df
-      -> bucket = pmod(xxhash64(key), n_buckets), salt = order // salt_rows
+      -> bucket = pmod(xxhash64(key), n_buckets), salt = order // stripe_rows
          (salting defuses long-conversation skew: one conversation can span
          several stripes; decode's global orderBy reassembles it)
-      -> groupBy(bucket, salt).applyInPandas(encode_stripe)   [one shuffle]
-      -> stripes rows (one per stripe-column)  [+ manifest agg, lineage rows]
+      -> repartition placing each (bucket, salt) group round-robin on one
+         task, then sortWithinPartitions(bucket, salt, sort keys)
+                                                          [one shuffle]
+      -> mapInArrow(encode_partition): each group's contiguous rows are one
+         stripe, sliced zero-copy into the numpy codec kernels
+      -> stripes rows (one per stripe-column)
+    COMMIT (encode_job, each streaming micro-batch, compact_job):
+      1. Spark appends the stripes rows under stripes/run=<run_id>
+      2. the driver reads that run dir's metadata columns back with pyarrow
+         (no stream bytes) and publishes the manifest, one row per stripe
+      3. then the lineage, one row per stripe; each is ONE parquet file
+         written under a _-prefixed name and moved into place
     DECODE: stripes table
       -> optional column pruning (filter col_name — predicate pushdown to
-         the parquet scan) and stripe pruning (manifest min/max)
-      -> groupBy(stripe_id).applyInPandas(decode_stripe)      [one shuffle]
+         the parquet scan) and stripe pruning (manifest min/max, key bloom)
+      -> repartition(stripe_id) + sortWithinPartitions   [one shuffle]
+      -> mapInArrow(decode_partition): streams one stripe at a time
       -> orderBy(sort keys) at comparison time only
 
 The stripes-as-rows layout is the Spark analog of the reference's
@@ -23,12 +35,17 @@ and stripe-granular parallelism falls out of row partitioning.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import uuid
+from datetime import datetime, timezone
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import stripe as stripe_mod
 
@@ -778,7 +795,6 @@ def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
                   .sortWithinPartitions("stripe_id"))
 
     try:  # arrow schema of the decoded output (timestamps carry session tz)
-        from pyspark.sql.pandas.types import to_arrow_schema
         tz = spark.conf.get("spark.sql.session.timeZone")
         target_schema = to_arrow_schema(schema, timezone=tz)
     except TypeError:
@@ -865,7 +881,6 @@ def decode_job_clustered(spark: SparkSession, out_dir: str,
     file_keep = file_keep.repartition(cores * 2)
 
     try:
-        from pyspark.sql.pandas.types import to_arrow_schema
         tz = spark.conf.get("spark.sql.session.timeZone")
         target_schema = to_arrow_schema(schema, timezone=tz)
     except TypeError:
@@ -910,69 +925,169 @@ def decode_job_clustered(spark: SparkSession, out_dir: str,
     return out
 
 
-def build_manifest(stripes: DataFrame, key_col: str | None = None,
-                   order_col: str | None = None) -> DataFrame:
+# ---------------------------------------------------------------------------
+# persistent table: driver-built manifest + lineage, idempotent resume
+# ---------------------------------------------------------------------------
+
+# what commit reads back from a run dir: the stripe-column rows without the
+# five stream columns (a few hundred bytes per stripe-column)
+_RUN_META = pa.schema([
+    f for f in to_arrow_schema(STRIPE_SCHEMA)
+    if f.name not in ("present", "data", "length", "dict_data", "extra")])
+_MANIFEST_HEAD = [
+    ("stripe_id", pa.string()), ("bucket", pa.int64()),
+    ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("n_cols", pa.int64()),
+    ("codecs", pa.string()), ("kinds", pa.string()),
+    ("checksum", pa.string())]
+_LINEAGE_HEAD = [f for f in _MANIFEST_HEAD if f[0] != "kinds"]
+
+
+def _build_manifest(rows: pa.Table, key_col: str | None,
+                    order_col: str | None) -> pa.Table:
     """Footer-style per-stripe index (the FileMetadata/StripeInformation +
-    ColumnStatistics analog, src/proto.rs:206-217,66-87): one small row per
-    stripe with sizes and per-key min/max for stripe pruning."""
-    aggs = [
-        F.max("bucket").alias("bucket"),
-        F.max("n_rows").alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.count("*").alias("n_cols"),
-        F.concat_ws(",", F.sort_array(F.collect_list(
-            F.concat_ws(":", "col_name", "codec")))).alias("codecs"),
-        F.concat_ws(",", F.sort_array(F.collect_list(
-            F.concat_ws(":", "col_name", "col_kind")))).alias("kinds"),
-        F.sha1(F.concat_ws(",", F.sort_array(F.collect_list(
-            F.concat_ws(":", "col_name", "checksum"))))).alias("checksum"),
-    ]
+    ColumnStatistics analog, src/proto.rs:206-217,66-87), built from the
+    stats the stripe-column rows already carry — an ORC writer likewise
+    never re-reads its stripes to write the footer. One row per stripe:
+    sizes, sorted ``col:codec`` / ``col:kind`` lists, sha1 over the sorted
+    ``col:checksum`` list, the key/order columns' min/max (no ``order_*``
+    columns without ``order_col``) and the key column's bloom for lookup
+    pruning. Crash-replayed duplicate (stripe_id, col_name) rows count
+    once; nulls are skipped like Spark's max/sum/concat_ws skip them."""
+    stripes: dict[str, dict[str, dict]] = {}
+    for r in rows.to_pylist():
+        stripes.setdefault(r["stripe_id"], {}).setdefault(r["col_name"], r)
+    fields = list(_MANIFEST_HEAD)
     for c, alias in ((key_col, "key"), (order_col, "order")):
         if c:
-            aggs.append(F.max(F.when(F.col("col_name") == c, F.col("min_val"))).alias(f"{alias}_min"))
-            aggs.append(F.max(F.when(F.col("col_name") == c, F.col("max_val"))).alias(f"{alias}_max"))
+            fields += [(f"{alias}_min", pa.string()),
+                       (f"{alias}_max", pa.string())]
     if key_col:
-        aggs.append(F.first(F.when(F.col("col_name") == key_col, F.col("bloom")),
-                            ignorenulls=True).alias("key_bloom"))
-    return stripes.groupBy("stripe_id").agg(*aggs)
+        fields.append(("key_bloom", pa.binary()))
+    out = []
+    for sid in sorted(stripes):
+        cols = stripes[sid]
+
+        def agg(fn, field):
+            vals = [r[field] for r in cols.values() if r[field] is not None]
+            return fn(vals) if vals else None
+
+        def listing(field):
+            return ",".join(sorted(
+                ":".join(v for v in (name, r[field]) if v is not None)
+                for name, r in cols.items()))
+
+        row = {"stripe_id": sid, "bucket": agg(max, "bucket"),
+               "n_rows": agg(max, "n_rows"),
+               "raw_bytes": agg(sum, "raw_bytes"),
+               "enc_bytes": agg(sum, "enc_bytes"), "n_cols": len(cols),
+               "codecs": listing("codec"), "kinds": listing("col_kind"),
+               "checksum": hashlib.sha1(
+                   listing("checksum").encode()).hexdigest()}
+        for c, alias in ((key_col, "key"), (order_col, "order")):
+            if c:
+                row[f"{alias}_min"] = cols.get(c, {}).get("min_val")
+                row[f"{alias}_max"] = cols.get(c, {}).get("max_val")
+        if key_col:
+            row["key_bloom"] = cols.get(key_col, {}).get("bloom")
+        out.append(row)
+    return pa.Table.from_pylist(out, schema=pa.schema(fields))
 
 
-# ---------------------------------------------------------------------------
-# persistent job with lineage + idempotent resume
-# ---------------------------------------------------------------------------
-
-
-def _lineage_from_manifest(manifest: DataFrame, run_id: str,
-                           params: dict | None = None) -> DataFrame:
+def _build_lineage(manifest: pa.Table, run_id: str, params: dict | None,
+                   status: str, committed_at: datetime) -> pa.Table:
+    """Lineage rows for ``manifest``'s stripes: their size/codec/checksum
+    columns plus ``status``, the run, ONE commit time and the layout
+    params resume and compaction check against (typed nulls when unset)."""
     params = params or {}
-    return manifest.select(
-        "stripe_id", "bucket", "n_rows", "raw_bytes", "enc_bytes", "n_cols",
-        "codecs", "checksum",
-        F.lit("ok").alias("status"), F.lit(run_id).alias("run_id"),
-        F.current_timestamp().alias("committed_at"),
-        F.lit(params.get("n_buckets")).cast("long").alias("p_n_buckets"),
-        F.lit(params.get("stripe_rows")).cast("long").alias("p_stripe_rows"),
-        F.lit(params.get("key_col")).cast("string").alias("p_key_col"),
-        F.lit(params.get("order_col")).cast("string").alias("p_order_col"),
+
+    def joined(k):
+        return ",".join(params[k]) if params.get(k) is not None else None
+
+    consts = [
+        ("status", status, pa.string()), ("run_id", run_id, pa.string()),
+        ("committed_at", committed_at, pa.timestamp("us", tz="UTC")),
+        ("p_n_buckets", params.get("n_buckets"), pa.int64()),
+        ("p_stripe_rows", params.get("stripe_rows"), pa.int64()),
+        ("p_key_col", params.get("key_col"), pa.string()),
+        ("p_order_col", params.get("order_col"), pa.string()),
         # -1 = "no stride index" (a real layout choice, not "unspecified"):
         # a None->value transition on resume must be caught too
-        F.lit(params.get("index_rows", -1) if params.get("index_rows")
-              is not None else -1).cast("long").alias("p_index_rows"),
-        F.lit(",".join(params["bloom_cols"])
-              if params.get("bloom_cols") is not None else None)
-         .cast("string").alias("p_bloom_cols"),
-        F.lit(",".join(params["sort_keys"])
-              if params.get("sort_keys") is not None else None)
-         .cast("string").alias("p_sort_keys"),
-    )
+        ("p_index_rows", params["index_rows"]
+         if params.get("index_rows") is not None else -1, pa.int64()),
+        ("p_bloom_cols", joined("bloom_cols"), pa.string()),
+        ("p_sort_keys", joined("sort_keys"), pa.string())]
+    cols = {c: manifest.column(c).cast(t) for c, t in _LINEAGE_HEAD}
+    cols.update({c: pa.array([v] * manifest.num_rows, t)
+                 for c, v, t in consts})
+    return pa.table(cols)
+
+
+def _parquet_files(out_dir: str, table_dir: str) -> tuple:
+    """(filesystem, paths) of the parquet files directly under
+    ``out_dir/table_dir``, skipping ``_``/``.`` names as Spark does (no
+    paths when the directory does not exist)."""
+    from pyarrow import fs as pafs
+    filesystem, base = _table_fs(out_dir)
+    infos = filesystem.get_file_info(pafs.FileSelector(
+        f"{base}/{table_dir}", allow_not_found=True))
+    return filesystem, [i.path for i in infos if i.is_file
+                        and not i.base_name.startswith(("_", "."))]
+
+
+def _read_dir(out_dir: str, table_dir: str, schema: pa.Schema) -> pa.Table:
+    """Driver-side pyarrow read of ``schema``'s columns from
+    ``out_dir/table_dir`` (empty when nothing is there)."""
+    import pyarrow.dataset as ds
+    filesystem, paths = _parquet_files(out_dir, table_dir)
+    return ds.dataset(paths, schema=schema, format="parquet",
+                      filesystem=filesystem).to_table()
+
+
+def _write_run(stripes: DataFrame, out_dir: str, run_id: str,
+               key_col: str | None, order_col: str | None) -> pa.Table:
+    """Append ``stripes`` under ``stripes/run=<run_id>`` (the commit's only
+    Spark work), then build that run's manifest from ONLY its metadata
+    columns, read back on the driver — O(batch), and no stream bytes."""
+    stripes.write.mode("append").parquet(f"{out_dir}/stripes/run={run_id}")
+    return _build_manifest(
+        _read_dir(out_dir, f"stripes/run={run_id}", _RUN_META),
+        key_col, order_col)
+
+
+def _publish(out_dir: str, table_dir: str, tbl: pa.Table,
+             run_id: str) -> None:
+    """Add ``tbl`` to ``out_dir/table_dir`` as ONE parquet file, written
+    under a ``_``-prefixed name that Spark and pyarrow readers skip and
+    then moved to a unique ``part-<run_id>-<uuid>.parquet``: readers see
+    the whole file or none of it, never a partial one."""
+    import pyarrow.parquet as pq
+    filesystem, base = _table_fs(out_dir)
+    name = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
+    final, tmp = f"{base}/{table_dir}/{name}", f"{base}/{table_dir}/_{name}"
+    filesystem.create_dir(f"{base}/{table_dir}", recursive=True)
+    try:
+        with filesystem.open_output_stream(tmp, compression=None) as f:
+            pq.write_table(tbl, f)
+        filesystem.move(tmp, final)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            filesystem.delete_file(tmp)
+        raise
+
+
+def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage table, or None while nothing is published there —
+    decided by a driver-side listing, so a fresh table runs no Spark job."""
+    if not _parquet_files(out_dir, "lineage")[1]:
+        return None
+    return spark.read.parquet(f"{out_dir}/lineage")
 
 
 def completed_stripes(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Stripe ids already committed per the lineage table (None if fresh)."""
-    try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
+    lineage = _read_lineage(spark, out_dir)
+    if lineage is None:
         return None
     return lineage.filter(F.col("status") == "ok").select("stripe_id").distinct()
 
@@ -987,13 +1102,12 @@ def _check_resume_params(spark: SparkSession, out_dir: str,
     mismatch would break the 're-encoding a stripe reproduces identical
     bytes' invariant and produce a mixed-layout table, so they're guarded
     too (older lineage without these columns skips their check)."""
-    try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
-        row = lineage.select(*[c for c in (
-            "p_n_buckets", "p_stripe_rows", "p_key_col", "p_index_rows",
-            "p_bloom_cols", "p_sort_keys") if c in lineage.columns]).first()
-    except Exception:
+    lineage = _read_lineage(spark, out_dir)
+    if lineage is None:
         return
+    row = lineage.select(*[c for c in (
+        "p_n_buckets", "p_stripe_rows", "p_key_col", "p_index_rows",
+        "p_bloom_cols", "p_sort_keys") if c in lineage.columns]).first()
     if row is None or row["p_n_buckets"] is None:
         return  # pre-param lineage (or empty): nothing to check against
     want_bloom = (",".join(params["bloom_cols"])
@@ -1020,7 +1134,7 @@ def _check_resume_params(spark: SparkSession, out_dir: str,
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """The manifest with crash-window duplicates collapsed: a rerun that
-    died between the manifest append and the lineage append re-appends the
+    died between the manifest file and the lineage file re-appends the
     same manifest rows; dedupe by stripe_id so stats never double-count."""
     return (spark.read.parquet(f"{out_dir}/manifest")
             .dropDuplicates(["stripe_id"]))
@@ -1029,39 +1143,31 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
 def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
            key_col: str, order_col: str | None, run_id: str,
            params: dict | None = None) -> None:
-    """Two-phase commit of ONE batch of stripes: append the batch's rows
-    into a run-scoped partition (``stripes/run=<run_id>``), then derive +
-    append manifest and lineage from ONLY that run's written bytes.
+    """Commit ONE batch of stripes, in this order: Spark appends the batch's
+    rows into a run-scoped partition (``stripes/run=<run_id>``); the driver
+    reads back ONLY that run dir's metadata columns (one pyarrow pass, no
+    stream bytes) and publishes the manifest, then the lineage, each as one
+    atomically published parquet file (see _publish).
 
     Commit cost is O(batch), never O(table) — the streaming path calls this
     per micro-batch, and re-reading the whole stripes table per batch would
     grow without bound. Crash-window replays (same run_id appending
-    byte-identical rows twice) are collapsed by the stripe-level
-    dropDuplicates before stats are aggregated, so manifest raw/enc byte
-    counts and checksums are invariant to replayed appends."""
-    run_dir = f"{out_dir}/stripes/run={run_id}"
-    stripes.write.mode("append").parquet(run_dir)
-    written = (spark.read.schema(STRIPE_SCHEMA).parquet(run_dir)
-               .dropDuplicates(["stripe_id", "col_name"]))
-    manifest = build_manifest(written, key_col, order_col)
-    # the manifest feeds two write actions (manifest + lineage); persist so
-    # the run-dir scan + groupBy runs once per commit, not once per write.
-    # Explicit unpersist: the streaming path commits per micro-batch, and
-    # leaked cache entries would accumulate for the stream's lifetime.
-    from pyspark import StorageLevel
-    manifest = manifest.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        manifest.write.mode("append").parquet(f"{out_dir}/manifest")
-        (_lineage_from_manifest(manifest, run_id, params)
-         .write.mode("append").parquet(f"{out_dir}/lineage"))
-    finally:
-        manifest.unpersist()
+    byte-identical rows twice) are collapsed per (stripe_id, col_name)
+    before stats are aggregated, so manifest raw/enc byte counts and
+    checksums are invariant to replayed appends. A batch with no stripes
+    publishes nothing."""
+    manifest = _write_run(stripes, out_dir, run_id, key_col, order_col)
+    if manifest.num_rows:
+        _publish(out_dir, "manifest", manifest, run_id)
+        _publish(out_dir, "lineage", _build_lineage(
+            manifest, run_id, params, "ok", datetime.now(timezone.utc)),
+            run_id)
 
 
 def read_stripes(spark: SparkSession, out_dir: str) -> DataFrame:
     """The full stripes table (all runs). The run= partition column is
     dropped; orphan rows from a crash between the stripes append and the
-    manifest append are harmless (decode dedupes per stripe-column)."""
+    manifest file are harmless (decode dedupes per stripe-column)."""
     return (spark.read.schema(STRIPE_SCHEMA)
             .option("basePath", f"{out_dir}/stripes")
             .parquet(f"{out_dir}/stripes")
@@ -1113,19 +1219,23 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
 
     commit(spark, stripes, out_dir, key_col, order_col, run_id, params=params)
 
-    stats_man = read_manifest(spark, out_dir)
+    import pyarrow.compute as pc
+    sums = ("n_rows", "raw_bytes", "enc_bytes")
+    # one row per stripe: a rerun that died between the manifest and the
+    # lineage publish re-appends the same manifest rows
+    man = (_read_dir(out_dir, "manifest", pa.schema(
+        [("stripe_id", pa.string())] + [(c, pa.int64()) for c in sums]))
+        .group_by("stripe_id", use_threads=False)
+        .aggregate([(c, "first") for c in sums]))
     if has_compactions(out_dir):
         # tombstoned stripes keep their manifest rows (old snapshots need
         # them) — stats must count only the active set or they double
-        stats_man = stats_man.join(active_stripe_ids(spark, out_dir),
-                                   "stripe_id", "left_semi")
-    stats = (stats_man
-             .agg(F.count("*").alias("n_stripes"), F.sum("n_rows").alias("n_rows"),
-                  F.sum("raw_bytes").alias("raw_bytes"),
-                  F.sum("enc_bytes").alias("enc_bytes")).collect()[0])
+        act = active_stripe_ids(spark, out_dir).toArrow()["stripe_id"]
+        man = man.filter(pc.is_in(man["stripe_id"], value_set=(
+            act.combine_chunks().cast(pa.string()))))
     return {"run_id": run_id, "resumed": resumed, "n_buckets": n_buckets,
-            "n_stripes": stats["n_stripes"], "n_rows": stats["n_rows"],
-            "raw_bytes": stats["raw_bytes"], "enc_bytes": stats["enc_bytes"]}
+            "n_stripes": man.num_rows,
+            **{c: pc.sum(man[f"{c}_first"]).as_py() for c in sums}}
 
 
 def decode_job(spark: SparkSession, out_dir: str,
@@ -1276,9 +1386,8 @@ def active_stripe_ids(spark: SparkSession, out_dir: str,
     the table as it stood at that point: a run_id string (inclusive of that
     run's commit) or anything castable to timestamp. None when the table
     has no lineage (fresh dir: nothing to resolve)."""
-    try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
+    lineage = _read_lineage(spark, out_dir)
+    if lineage is None:
         if as_of is not None:
             raise ValueError(
                 f"as_of={as_of!r} on {out_dir}: no lineage table — "
@@ -1368,13 +1477,13 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     decode, re-encode at the table's recorded layout params (same bucket
     hash, same order salt — the merged layout is exactly what a batch
     encode of the union would produce), land under a fresh ``c...`` run
-    prefix (ids can never collide with live ids), and ONE lineage append
-    publishes the new stripes and tombstones the old in the same job.
+    prefix (ids can never collide with live ids), and ONE lineage file
+    publishes the new stripes and tombstones the old together.
 
     Crash windows: the ``_compactions`` marker is written BEFORE any new
     bytes, so from that point every decode resolves visibility through the
     lineage active set — a compaction that dies after writing stripes but
-    before the lineage append leaves only invisible orphan bytes, and
+    before the lineage file leaves only invisible orphan bytes, and
     rerunning compact_job (fresh run id) completes the work. Old snapshots
     remain readable: decode_job(as_of=<pre-compaction run>) sees the
     original stripes (tombstones commit later than the cutoff)."""
@@ -1417,21 +1526,12 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
         stripe_rows=params["stripe_rows"], n_buckets=params["n_buckets"],
         index_rows=params["index_rows"], bloom_cols=params["bloom_cols"],
         stripe_prefix=f"{run_id}-")
-    run_dir = f"{out_dir}/stripes/run={run_id}"
-    new_stripes.write.mode("append").parquet(run_dir)
-    written = (spark.read.schema(STRIPE_SCHEMA).parquet(run_dir)
-               .dropDuplicates(["stripe_id", "col_name"]))
-    # three consumers (manifest write, the ok lineage rows, the final
-    # count) — persist so the merged run dir is scanned/aggregated once
-    new_manifest = build_manifest(written, params["key_col"],
-                                  params["order_col"]) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    new_manifest = _write_run(new_stripes, out_dir, run_id,
+                              params["key_col"], params["order_col"])
     try:
-        new_manifest.write.mode("append").parquet(f"{out_dir}/manifest")
-        ok_rows = _lineage_from_manifest(new_manifest, run_id, params)
-        dead_rows = (_lineage_from_manifest(
-            man.join(victims, "stripe_id", "left_semi"), run_id, params)
-            .withColumn("status", F.lit("compacted")))
+        dead = (man.join(victims, "stripe_id", "left_semi")
+                .select(*[c for c, _ in _LINEAGE_HEAD]).toArrow())
+        _publish(out_dir, "manifest", new_manifest, run_id)
         # optimistic conflict detection (round-5 advice): a CONCURRENT
         # compactor (another driver, or a manual run racing the stream's
         # compact_every) may have selected the same victims and published
@@ -1446,18 +1546,17 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
         # the whole rewrite job to one driver round-trip; the documented
         # deployment assumption stays one maintenance writer per table.
         _assert_no_compaction_conflict(spark, out_dir, victims)
-        # ONE append job publishes + tombstones together (both sides share
-        # the query's current_timestamp, so an as_of cutoff can never split
-        # them)
-        ok_rows.unionByName(dead_rows).write.mode("append") \
-            .parquet(f"{out_dir}/lineage")
-        n_new = new_manifest.count()
+        # ONE lineage file publishes + tombstones together (both sides
+        # share one committed_at, so an as_of cutoff can never split them)
+        now = datetime.now(timezone.utc)
+        _publish(out_dir, "lineage", pa.concat_tables([
+            _build_lineage(new_manifest, run_id, params, "ok", now),
+            _build_lineage(dead, run_id, params, "compacted", now)]), run_id)
     finally:
-        new_manifest.unpersist()
         victims.unpersist()
         man.unpersist()
     return {"run_id": run_id, "compacted_stripes": int(n_victims),
-            "new_stripes": int(n_new)}
+            "new_stripes": new_manifest.num_rows}
 
 
 _EXPIRED_MARKER_DIR = "_expired"

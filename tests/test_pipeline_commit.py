@@ -1,11 +1,15 @@
 """Commit-path invariants: O(batch) commit cost, crash-window replay
-safety for manifest stats, resume parameter guard, and the footer-based
-row estimate that replaced the count() pre-pass."""
+safety for manifest stats, the driver-built manifest against its Spark
+oracle, atomic publish, resume parameter guard, and the footer-based row
+estimate that replaced the count() pre-pass."""
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
+from pyarrow import fs as pafs
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from orc_format_spark import pipeline, transcripts
 from orc_format_spark.stripe import _stat_upper_bound
@@ -268,3 +272,160 @@ def test_balanced_encode_placement(spark):
     probes_enc = pipeline._partition_probes(p_enc)
     targets = [pipeline._murmur3_long(m) % p_enc for m in probes_enc]
     assert targets == list(range(p_enc))
+
+
+def _spark_manifest_oracle(written, key_col, order_col):
+    """The manifest as a Spark groupBy over the stripe-column rows: the
+    reference the driver-built manifest is checked against."""
+    aggs = [
+        F.max("bucket").alias("bucket"),
+        F.max("n_rows").alias("n_rows"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.count("*").alias("n_cols"),
+        F.concat_ws(",", F.sort_array(F.collect_list(
+            F.concat_ws(":", "col_name", "codec")))).alias("codecs"),
+        F.concat_ws(",", F.sort_array(F.collect_list(
+            F.concat_ws(":", "col_name", "col_kind")))).alias("kinds"),
+        F.sha1(F.concat_ws(",", F.sort_array(F.collect_list(
+            F.concat_ws(":", "col_name", "checksum"))))).alias("checksum"),
+    ]
+    for c, alias in ((key_col, "key"), (order_col, "order")):
+        if c:
+            aggs.append(F.max(F.when(F.col("col_name") == c, F.col("min_val")))
+                        .alias(f"{alias}_min"))
+            aggs.append(F.max(F.when(F.col("col_name") == c, F.col("max_val")))
+                        .alias(f"{alias}_max"))
+    if key_col:
+        aggs.append(F.first(F.when(F.col("col_name") == key_col,
+                                   F.col("bloom")),
+                            ignorenulls=True).alias("key_bloom"))
+    return (written.dropDuplicates(["stripe_id", "col_name"])
+            .groupBy("stripe_id").agg(*aggs))
+
+
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("stripe_id", T.StringType()),
+    T.StructField("bucket", T.LongType()),
+    T.StructField("n_rows", T.LongType()),
+    T.StructField("raw_bytes", T.LongType()),
+    T.StructField("enc_bytes", T.LongType()),
+    T.StructField("n_cols", T.LongType()),
+    T.StructField("codecs", T.StringType()),
+    T.StructField("checksum", T.StringType()),
+    T.StructField("status", T.StringType()),
+    T.StructField("run_id", T.StringType()),
+    T.StructField("committed_at", T.TimestampType()),
+    T.StructField("p_n_buckets", T.LongType()),
+    T.StructField("p_stripe_rows", T.LongType()),
+    T.StructField("p_key_col", T.StringType()),
+    T.StructField("p_order_col", T.StringType()),
+    T.StructField("p_index_rows", T.LongType()),
+    T.StructField("p_bloom_cols", T.StringType()),
+    T.StructField("p_sort_keys", T.StringType()),
+])
+
+
+@pytest.mark.parametrize("table", ["keyed", "no_order", "nested"])
+def test_driver_manifest_matches_spark_groupby(spark, df, tmp_path, table):
+    """The manifest commit builds on the driver equals the Spark groupBy
+    oracle row for row (sha1 checksums, key/order min/max, key bloom), in
+    the same column order; without order_col there are no order_* columns.
+    The lineage reads back with exactly the Spark-written schema: column
+    order, a timestamp committed_at shared by the whole commit, and typed
+    string nulls for unset params."""
+    src = transcripts.enrich(df) if table == "nested" else df
+    order_col = None if table == "no_order" else "turn_idx"
+    out = str(tmp_path / table)
+    stripes = pipeline.encode_dataframe(
+        src, "conv_id", order_col, sort_keys=["conv_id", "turn_idx"],
+        stripe_rows=300, n_buckets=6, bloom_cols=["conv_id"])
+    params = {"n_buckets": 6, "stripe_rows": 300, "key_col": "conv_id",
+              "order_col": order_col, "index_rows": None,
+              "bloom_cols": ["conv_id"], "sort_keys": None}
+    pipeline.commit(spark, stripes, out, "conv_id", order_col, run_id="p1",
+                    params=params)
+
+    got = spark.read.parquet(f"{out}/manifest")
+    exp = _spark_manifest_oracle(pipeline.read_stripes(spark, out),
+                                 "conv_id", order_col)
+    assert got.columns == exp.columns
+    assert ("order_min" in got.columns) == (order_col is not None)
+    assert got.schema.simpleString() == exp.schema.simpleString()
+    rows = sorted(got.collect())
+    assert len(rows) > 1 and rows == sorted(exp.collect())
+
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.schema == LINEAGE_SCHEMA
+    assert lineage.select("committed_at").distinct().count() == 1
+    row = lineage.first()
+    assert row["p_sort_keys"] is None and row["p_bloom_cols"] == "conv_id"
+    assert row["p_order_col"] == order_col and row["p_index_rows"] == -1
+    assert (sorted(lineage.select("stripe_id", "checksum").collect())
+            == sorted(got.select("stripe_id", "checksum").collect()))
+
+
+class _MoveFails(pafs.LocalFileSystem):
+    """Local filesystem whose publishing move fails once the temp file is
+    fully written."""
+
+    def move(self, src, dest):
+        assert os.path.basename(src).startswith("_"), src
+        assert pq.ParquetFile(src).metadata.num_rows > 0
+        raise OSError("injected failure before the publishing move")
+
+
+def test_failed_publish_leaves_tables_unchanged(spark, df, tmp_path,
+                                                monkeypatch):
+    """A commit whose publishing move fails adds no manifest or lineage
+    row; rerunning it completes, and no _-prefixed temp file is left."""
+    out = str(tmp_path / "atomic")
+    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
+                                        stripe_rows=300, n_buckets=6)
+    pipeline.commit(spark, stripes.filter(F.col("bucket") % 2 == 0), out,
+                    "conv_id", "turn_idx", run_id="a")
+
+    def snapshot():
+        return (sorted(spark.read.parquet(f"{out}/manifest").collect()),
+                sorted(spark.read.parquet(f"{out}/lineage").collect()))
+
+    before = snapshot()
+    real_fs = pipeline._table_fs
+    odd = stripes.filter(F.col("bucket") % 2 == 1)
+    monkeypatch.setattr(pipeline, "_table_fs",
+                        lambda d: (_MoveFails(), real_fs(d)[1]))
+    with pytest.raises(OSError, match="injected"):
+        pipeline.commit(spark, odd, out, "conv_id", "turn_idx", run_id="b")
+    monkeypatch.undo()
+    assert snapshot() == before
+
+    pipeline.commit(spark, odd, out, "conv_id", "turn_idx", run_id="b")
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert (sorted(r["stripe_id"] for r in lineage.collect())
+            == sorted(r["stripe_id"] for r in
+                      stripes.select("stripe_id").distinct().collect()))
+    for sub in ("manifest", "lineage"):
+        names = os.listdir(f"{out}/{sub}")
+        assert names and not [n for n in names if n.startswith("_")], names
+
+
+# Spark jobs of encode_job into a fresh table from a parquet input: only the
+# stripes write (its shuffle stage and the write itself); the manifest,
+# lineage, closing stats and resume checks run on the driver.
+FRESH_ENCODE_JOBS = 2
+
+
+def test_fresh_encode_job_spark_job_count(spark, df, tmp_path):
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    inp = spark.read.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-encode", "encode_job into a fresh table")
+    try:
+        stats = pipeline.encode_job(spark, inp, str(tmp_path / "enc"),
+                                    stripe_rows=300)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("fresh-encode")
+    assert stats["n_rows"] == df.count() and not stats["resumed"]
+    assert 0 < len(jobs) <= FRESH_ENCODE_JOBS, jobs
