@@ -6,14 +6,15 @@ dictionary encoding with sorted dictionaries, integer RLE v2
 (short-repeat / direct / delta / patched-base), boolean/byte RLE, raw IEEE
 floats, string direct encoding, plus FSST symbol-table compression,
 bit-packing and frame-of-reference — all implemented as vectorized numpy
-kernels invoked from Arrow-batched pandas UDFs (``applyInPandas``), with a
-per-stripe codec auto-selector, a footer-style manifest table, per-partition
-lineage/checkpoint records, and salted repartitioning for skew.
+kernels invoked from Arrow-batched ``mapInArrow`` tasks, one stripe at a
+time, with a per-stripe codec auto-selector, a footer-style manifest table
+that reads are planned from on the driver, per-commit lineage records, and
+salted repartitioning for skew.
 
 Layout:
     codecs/    pure-numpy codec kernels (no Spark imports)
     selector   per-column codec auto-selection (NDV / run hist / entropy)
-    stripe     pandas-level stripe encode/decode (one stripe = one group)
+    stripe     stripe encode/decode, Arrow-native (plus a pandas form)
     pipeline   Spark jobs: encode/decode DataFrames, lineage, resume
     transcripts  deterministic synthetic transcripts generator (FIXTURES.md A)
     ops/       large-scale training-data pipeline operators (dedup, ANN,

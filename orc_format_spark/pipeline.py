@@ -21,8 +21,12 @@ Execution model:
       3. then the lineage, one row per stripe; each is ONE parquet file
          written under a _-prefixed name and moved into place
     DECODE: stripes table
-      -> optional column pruning (filter col_name — predicate pushdown to
-         the parquet scan) and stripe pruning (manifest min/max, key bloom)
+      -> planned on the driver with pyarrow: schema from one manifest
+         ``kinds`` value, key lookups by probing every manifest row's key
+         bloom (no Spark job); a manifest min/max predicate stays a Spark
+         filter over the manifest
+      -> column pruning (filter col_name) and the surviving stripe ids as
+         a literal IN-filter, both pushed down to the parquet scan
       -> repartition(stripe_id) + sortWithinPartitions   [one shuffle]
       -> mapInArrow(decode_partition): streams one stripe at a time
       -> orderBy(sort keys) at comparison time only
@@ -40,7 +44,6 @@ import hashlib
 import uuid
 from datetime import datetime, timezone
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -719,24 +722,25 @@ def infer_schema(stripes: DataFrame, columns: list[str] | None = None) -> tuple[
 def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
                                columns: list[str] | None = None
                                ) -> tuple[T.StructType, list[str]]:
-    """Schema from the manifest's per-stripe ``kinds`` string — a single-row
-    read, vs infer_schema's distinct over every stripe-column row (at 15M
-    stripes that distinct scans 150M metadata rows before any data decode).
-    Falls back to the stripes distinct for pre-``kinds`` manifests."""
-    try:
-        m = spark.read.parquet(f"{out_dir}/manifest")
-        if "kinds" in m.columns:
-            row = m.select("kinds").first()
-            if row is not None and row["kinds"]:
-                by_name = {}
-                for pair in row["kinds"].split(","):
-                    # FIRST colon: recursive kinds ("list:array_int64")
-                    # contain colons themselves; column names never do
-                    name, kind = pair.split(":", 1)
-                    by_name[name] = kind
-                return _schema_from_kinds(by_name, columns)
-    except Exception:
-        pass
+    """Schema from the manifest's per-stripe ``kinds`` string, read on the
+    driver with pyarrow (no Spark job) from the first row that has one —
+    vs infer_schema's distinct over every stripe-column row (at 15M
+    stripes that distinct scans 150M metadata rows before any data
+    decode). Falls back to that distinct only when the manifest has no
+    files or no non-null ``kinds`` (pre-``kinds`` tables); a manifest
+    file that cannot be read raises."""
+    import pyarrow.dataset as ds
+    head = _dataset(out_dir, "manifest", pa.schema([("kinds", pa.string())])
+                    ).head(1, filter=ds.field("kinds").is_valid())
+    kinds = head["kinds"][0].as_py() if head.num_rows else None
+    if kinds:
+        by_name = {}
+        for pair in kinds.split(","):
+            # FIRST colon: recursive kinds ("list:array_int64") contain
+            # colons themselves; column names never do
+            name, kind = pair.split(":", 1)
+            by_name[name] = kind
+        return _schema_from_kinds(by_name, columns)
     return infer_schema(read_stripes(spark, out_dir), columns)
 
 
@@ -1035,13 +1039,14 @@ def _parquet_files(out_dir: str, table_dir: str) -> tuple:
                         and not i.base_name.startswith(("_", "."))]
 
 
-def _read_dir(out_dir: str, table_dir: str, schema: pa.Schema) -> pa.Table:
-    """Driver-side pyarrow read of ``schema``'s columns from
-    ``out_dir/table_dir`` (empty when nothing is there)."""
+def _dataset(out_dir: str, table_dir: str, schema: pa.Schema):
+    """Driver-side pyarrow dataset of ``schema``'s columns over
+    ``out_dir/table_dir`` (empty when nothing is there; a column a file
+    lacks reads as nulls)."""
     import pyarrow.dataset as ds
     filesystem, paths = _parquet_files(out_dir, table_dir)
     return ds.dataset(paths, schema=schema, format="parquet",
-                      filesystem=filesystem).to_table()
+                      filesystem=filesystem)
 
 
 def _write_run(stripes: DataFrame, out_dir: str, run_id: str,
@@ -1051,7 +1056,7 @@ def _write_run(stripes: DataFrame, out_dir: str, run_id: str,
     columns, read back on the driver — O(batch), and no stream bytes."""
     stripes.write.mode("append").parquet(f"{out_dir}/stripes/run={run_id}")
     return _build_manifest(
-        _read_dir(out_dir, f"stripes/run={run_id}", _RUN_META),
+        _dataset(out_dir, f"stripes/run={run_id}", _RUN_META).to_table(),
         key_col, order_col)
 
 
@@ -1223,9 +1228,9 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
     sums = ("n_rows", "raw_bytes", "enc_bytes")
     # one row per stripe: a rerun that died between the manifest and the
     # lineage publish re-appends the same manifest rows
-    man = (_read_dir(out_dir, "manifest", pa.schema(
+    man = (_dataset(out_dir, "manifest", pa.schema(
         [("stripe_id", pa.string())] + [(c, pa.int64()) for c in sums]))
-        .group_by("stripe_id", use_threads=False)
+        .to_table().group_by("stripe_id", use_threads=False)
         .aggregate([(c, "first") for c in sums]))
     if has_compactions(out_dir):
         # tombstoned stripes keep their manifest rows (old snapshots need
@@ -1238,18 +1243,70 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
             **{c: pc.sum(man[f"{c}_first"]).as_py() for c in sums}}
 
 
+# up to this many planned stripe ids become a literal IN-filter; more ride
+# a broadcast semi-join
+_MAX_LITERAL_IDS = 10_000
+
+
+def _bloom_survivors(out_dir: str, key) -> list[str]:
+    """Ids of the manifest's stripes whose key bloom might hold ``key``,
+    each once (crash-replayed manifest rows repeat). A driver-side pyarrow
+    pass, like an ORC reader planning from its footer: each manifest file
+    is streamed as (stripe_id, key_bloom) record batches through one
+    vectorized probe each. The files are scanned one at a time, so driver
+    memory stays bounded by one file (a dataset-wide scan reads ahead of
+    this slow consumer and ended up holding most of the column). Null,
+    legacy or missing blooms never prune."""
+    from . import bloom as bloom_mod
+    schema = pa.schema([("stripe_id", pa.string()), ("key_bloom", pa.binary())])
+    keep: dict[str, None] = {}
+    for frag in _dataset(out_dir, "manifest", schema).get_fragments():
+        for batch in frag.to_batches(schema=schema):
+            hit = bloom_mod.might_contain_many(
+                batch.column("key_bloom").to_pylist(), key)
+            keep.update(dict.fromkeys(
+                batch.column("stripe_id").filter(pa.array(hit)).to_pylist()))
+    return list(keep)
+
+
+def _only(df: DataFrame, keep) -> DataFrame:
+    """``df`` narrowed to the stripe ids in ``keep`` (a list, or a
+    DataFrame with a ``stripe_id`` column). Iceberg-style: a listed plan
+    becomes a LITERAL IN-filter that Catalyst pushes into the parquet scan
+    (row-group stats skip the pruned stripes' bytes entirely), where a
+    semi-join would read every stripe's bytes first and filter after. The
+    semi-join is the fallback only for huge survivor sets."""
+    if isinstance(keep, list):
+        if len(keep) <= _MAX_LITERAL_IDS:
+            return df.filter(F.col("stripe_id").isin(keep))
+        keep = df.sparkSession.createDataFrame(
+            [(i,) for i in keep], "stripe_id string")
+    return df.join(F.broadcast(keep.select("stripe_id")), "stripe_id",
+                   "left_semi")
+
+
 def decode_job(spark: SparkSession, out_dir: str,
                columns: list[str] | None = None,
                stripe_predicate=None,
                stride_range: tuple | None = None,
                key_equals=None, as_of=None) -> DataFrame:
-    """Read + decode a persisted stripes table; ``stripe_predicate`` is a
-    Column over the manifest (e.g. key_min/key_max bounds) used to prune
-    whole stripes before any decode work — the Spark analog of the
-    reference's (unused) stats-skipping model (src/proto.rs:66-111).
-    ``stride_range`` additionally skips row groups INSIDE surviving stripes
-    (see decode_dataframe). Stats are strings: numeric predicates must use
-    int-like key columns (stored numerically) or cast explicitly.
+    """Read + decode a persisted stripes table. Planning is driver-side,
+    the way an ORC reader plans from its footer (reference
+    src/read/mod.rs:46-159): the schema comes from one manifest ``kinds``
+    value and ``key_equals`` probes every manifest row's key bloom, both
+    read with pyarrow — on a never-compacted table, with no
+    ``stripe_predicate``, building the plan runs no Spark job and Spark
+    runs only the stripes scan and the decode.
+
+    ``stripe_predicate`` is a Column over the manifest (e.g.
+    key_min/key_max bounds) that prunes whole stripes before any decode
+    work — the Spark analog of the reference's (unused) stats-skipping
+    model (src/proto.rs:66-111); it stays a Spark filter over
+    read_manifest, narrowed to the bloom survivors when ``key_equals`` is
+    given too. ``stride_range`` additionally skips row groups INSIDE
+    surviving stripes (see decode_dataframe). Stats are strings: numeric
+    predicates must use int-like key columns (stored numerically) or cast
+    explicitly.
 
     ``as_of`` (a run_id, or anything castable to timestamp) time-travels to
     that snapshot. Compacted tables always resolve stripe visibility
@@ -1260,40 +1317,21 @@ def decode_job(spark: SparkSession, out_dir: str,
         act = active_stripe_ids(spark, out_dir, as_of)
         if act is not None:
             stripes = stripes.join(act, "stripe_id", "left_semi")
-    if stripe_predicate is not None or key_equals is not None:
-        manifest = read_manifest(spark, out_dir)
-        if stripe_predicate is not None:
-            manifest = manifest.filter(stripe_predicate)
-        if key_equals is not None:
-            # bloom probe per manifest row — distributed (the manifest can
-            # be millions of rows at 100 TB; only the SURVIVORS come back)
-            from pyspark.sql.functions import pandas_udf
-            from . import bloom as bloom_mod
-            target = key_equals
-
-            @pandas_udf("boolean")
-            def probe(blooms: pd.Series) -> pd.Series:
-                # one vectorized batch probe: target hashed once, k probe
-                # BYTES gathered per blob — no per-row header parse or
-                # bitset unpack (15M manifest rows = 15M probes at 100 TB)
-                return pd.Series(bloom_mod.might_contain_many(
-                    [b if b is not None else b"" for b in blooms], target))
-
-            manifest = manifest.filter(probe(F.col("key_bloom")))
-        # Iceberg-style planning: surviving stripe ids become a LITERAL
-        # IN-filter so Catalyst pushes it into the parquet scan (row-group
-        # stats skip the pruned stripes' data bytes entirely). A semi-join
-        # would read every stripe's bytes first and filter after. Fall back
-        # to the semi-join only when the survivor list itself is huge.
-        ids = [r["stripe_id"] for r in
-               manifest.select("stripe_id").limit(10_001).collect()]
-        if len(ids) <= 10_000:
-            stripes = stripes.filter(F.col("stripe_id").isin(ids))
-        else:
-            keep = manifest.select("stripe_id")
-            stripes = stripes.join(F.broadcast(keep), "stripe_id", "left_semi")
-    # schema from ONE manifest row — the stripes scan below is then the
-    # FIRST scan of the stripes table in the plan (no metadata distinct)
+    keep = None
+    if key_equals is not None:
+        keep = _bloom_survivors(out_dir, key_equals)
+    if stripe_predicate is not None:
+        manifest = read_manifest(spark, out_dir).filter(stripe_predicate)
+        if keep is not None:
+            manifest = _only(manifest, keep)
+        keep = [r["stripe_id"] for r in manifest.select("stripe_id")
+                .limit(_MAX_LITERAL_IDS + 1).collect()]
+        if len(keep) > _MAX_LITERAL_IDS:
+            keep = manifest
+    if keep is not None:
+        stripes = _only(stripes, keep)
+    # schema from one manifest value on the driver: no metadata distinct
+    # over the stripes table runs ahead of the decode
     schema, columns = infer_schema_from_manifest(spark, out_dir, columns)
     return decode_dataframe(stripes, columns=columns, schema=schema,
                             stride_range=stride_range)

@@ -1,5 +1,8 @@
-"""Stripe-level encode/decode over pandas DataFrames (one stripe = one
-``applyInPandas`` group; the Spark glue lives in :mod:`.pipeline`).
+"""Stripe-level encode/decode. The pipeline's ``mapInArrow`` kernels
+call the Arrow-native pair ``encode_stripe_arrow``/``decode_stripe_arrow``
+on each stripe's contiguous rows (the Spark glue lives in
+:mod:`.pipeline`); ``encode_stripe``/``decode_stripe`` are the same codecs
+over pandas DataFrames, kept for in-process callers.
 
 A stripe is the engine's unit of parallelism — the analog of the reference's
 ORC stripe (StripeInformation, /root/reference/src/proto.rs:206-217), stored

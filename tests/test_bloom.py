@@ -1,6 +1,9 @@
 """Per-stripe bloom filters: point-lookup stripe pruning on hash-bucketed
 keys (the BloomFilter-stream analog, reference src/proto.rs:100-111)."""
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -140,3 +143,186 @@ def test_scalar_and_batch_probes_agree():
         batch = bloom.might_contain_many(blobs, probe).tolist()
         scalar = [bloom.might_contain(b, probe) for b in blobs]
         assert batch == scalar, probe
+
+
+# ---------------------------------------------------------------------------
+# driver-side lookup planning: decode_job(key_equals=...) probes the
+# manifest blooms with pyarrow on the driver
+# ---------------------------------------------------------------------------
+
+# Spark jobs of a full never-compacted-table lookup (decode_job plus a
+# filter and a collect): the stripes scan's shuffle stage and the decode.
+# The plan alone runs none.
+LOOKUP_JOBS = 2
+
+
+@pytest.fixture(scope="module")
+def keyed(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("lookup") / "enc")
+    df = transcripts.generate(spark, n_convs=120, seed=23)
+    df.cache().count()
+    pipeline.encode_job(spark, df, out, stripe_rows=400, n_buckets=8)
+    return df, out
+
+
+def _scalar_survivors(spark, out: str, key) -> set[str]:
+    """The reference plan: the scalar probe over read_manifest's rows."""
+    return {r["stripe_id"] for r in
+            pipeline.read_manifest(spark, out).collect()
+            if bloom.might_contain(bytes(r["key_bloom"] or b""), key)}
+
+
+def _assert_survivors_match(spark, out: str, keys) -> None:
+    for key in keys:
+        got = pipeline._bloom_survivors(out, key)
+        assert len(got) == len(set(got)), f"{key}: duplicate ids {got}"
+        assert set(got) == _scalar_survivors(spark, out, key), key
+
+
+def _manifest_file(out: str) -> str:
+    d = f"{out}/manifest"
+    return next(f"{d}/{n}" for n in sorted(os.listdir(d))
+                if n.endswith(".parquet"))
+
+
+def test_driver_survivors_equal_scalar_probe(spark, keyed):
+    """Every key of a small table, plus an absent one: the driver's
+    survivor ids are exactly the scalar probe's over read_manifest."""
+    df, out = keyed
+    keys = [r["conv_id"] for r in df.select("conv_id").distinct().collect()]
+    _assert_survivors_match(spark, out, keys + ["no-such-conversation"])
+    assert pipeline._bloom_survivors(out, "no-such-conversation") == []
+
+
+def test_driver_survivors_keep_legacy_and_empty_blooms(spark, keyed,
+                                                       tmp_path):
+    """Manifest rows with a null, empty or pre-version bloom are never
+    pruned, for present and absent keys alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    df, src = keyed
+    out = str(shutil.copytree(src, tmp_path / "enc"))
+    man = pq.read_table(_manifest_file(out)).slice(0, 3)
+    legacy = bloom.build(["a", "b"])[1:]  # no version byte
+    man = (man.set_column(man.schema.get_field_index("stripe_id"),
+                          "stripe_id", pa.array(["old-0", "old-1", "old-2"]))
+           .set_column(man.schema.get_field_index("key_bloom"), "key_bloom",
+                       pa.array([None, b"", legacy], pa.binary())))
+    pipeline._publish(out, "manifest", man, "legacy")
+    present = df.select("conv_id").first()["conv_id"]
+    _assert_survivors_match(spark, out, [present, "no-such-conversation"])
+    assert pipeline._bloom_survivors(out, "no-such-conversation") == [
+        "old-0", "old-1", "old-2"]
+
+
+def test_driver_survivors_dedupe_replayed_manifest_file(spark, keyed,
+                                                        tmp_path):
+    """A manifest file published twice (a crash replay) repeats every row:
+    each surviving stripe is planned once."""
+    df, src = keyed
+    out = str(shutil.copytree(src, tmp_path / "enc"))
+    f = _manifest_file(out)
+    shutil.copy(f, f.replace("part-", "part-replay-"))
+    keys = [r["conv_id"] for r in df.select("conv_id").distinct()
+            .limit(10).collect()]
+    _assert_survivors_match(spark, out, keys)
+    assert pipeline._bloom_survivors(out, keys[0])
+
+
+def test_key_equals_with_stripe_predicate(spark, keyed, monkeypatch):
+    """Both arguments: the stripes handed to decode are the bloom
+    survivors that also pass the manifest predicate, and the lookup still
+    returns exactly the key's rows."""
+    df, out = keyed
+    key = df.select("conv_id").first()["conv_id"]
+    pred = (F.col("key_min") <= F.lit(key)) & (F.col("key_max") >= F.lit(key))
+    manifest = pipeline.read_manifest(spark, out)
+    want = (set(pipeline._bloom_survivors(out, key))
+            & {r["stripe_id"] for r in manifest.filter(pred).collect()})
+    real, handed = pipeline.decode_dataframe, []
+
+    def capture(stripes, *a, **kw):
+        handed.append(stripes)
+        return real(stripes, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "decode_dataframe", capture)
+    got = pipeline.decode_job(spark, out, key_equals=key,
+                              stripe_predicate=pred)
+    assert {r["stripe_id"] for r in
+            handed[0].select("stripe_id").distinct().collect()} == want
+    rows = got.filter(F.col("conv_id") == key)
+    assert rows.count() == df.filter(F.col("conv_id") == key).count() > 0
+    assert rows.exceptAll(df.filter(F.col("conv_id") == key)
+                          .select(rows.columns)).count() == 0
+    none = pipeline.decode_job(spark, out, key_equals=key,
+                               stripe_predicate=F.col("key_max") < F.lit(""))
+    assert none.count() == 0
+
+
+def test_lookup_on_compacted_table(spark, tmp_path):
+    """Two batches leave every (bucket, salt) slot with two stripes;
+    after compact_job a lookup returns exactly that conversation's rows,
+    once each (tombstoned stripes stay in the manifest, so the bloom
+    survivors include them and the active set must drop them)."""
+    out = str(tmp_path / "enc")
+    df = transcripts.generate(spark, n_convs=60, seed=24)
+    ids = sorted(r["conv_id"] for r in df.select("conv_id").collect())
+    params = {"n_buckets": 4, "stripe_rows": 400, "key_col": "conv_id",
+              "order_col": "turn_idx", "index_rows": None,
+              "bloom_cols": ["conv_id"], "sort_keys": None}
+    half = F.col("conv_id") < F.lit(ids[len(ids) // 2])
+    for i, part in enumerate((df.filter(half), df.filter(~half))):
+        stripes = pipeline.encode_dataframe(
+            part, "conv_id", "turn_idx", stripe_rows=400, n_buckets=4,
+            bloom_cols=["conv_id"], stripe_prefix=f"b{i:08d}-")
+        pipeline.commit(spark, stripes, out, "conv_id", "turn_idx",
+                        run_id=f"batch{i}", params=params)
+    assert pipeline.compact_job(spark, out)["compacted_stripes"] >= 2
+    for key in (ids[0], ids[-1]):
+        want = df.filter(F.col("conv_id") == key)
+        got = (pipeline.decode_job(spark, out, key_equals=key)
+               .filter(F.col("conv_id") == key).select(df.columns))
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+
+def test_lookup_spark_job_count(spark, keyed):
+    """On a never-compacted table, planning a lookup runs no Spark job and
+    the whole lookup runs at most LOOKUP_JOBS."""
+    df, out = keyed
+    key = df.select("conv_id").first()["conv_id"]
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, sc.statusTracker().getJobIdsForGroup(group)
+
+    lookup, plan_jobs = jobs("lookup-plan", lambda: pipeline.decode_job(
+        spark, out, key_equals=key))
+    assert plan_jobs == []
+    rows, run_jobs = jobs("lookup-run", lambda: lookup.filter(
+        F.col("conv_id") == key).collect())
+    assert len(rows) == df.filter(F.col("conv_id") == key).count()
+    assert 0 < len(run_jobs) <= LOOKUP_JOBS, run_jobs
+
+
+@pytest.mark.parametrize("with_predicate", [False, True])
+def test_lookup_semi_join_fallback(spark, keyed, monkeypatch,
+                                   with_predicate):
+    """Past _MAX_LITERAL_IDS survivors the plan narrows the stripes with a
+    broadcast semi-join instead of a literal IN-list: same rows."""
+    df, out = keyed
+    key = df.select("conv_id").first()["conv_id"]
+    monkeypatch.setattr(pipeline, "_MAX_LITERAL_IDS", 0)
+    pred = (F.col("key_min") <= F.lit(key)) if with_predicate else None
+    got = (pipeline.decode_job(spark, out, key_equals=key,
+                               stripe_predicate=pred)
+           .filter(F.col("conv_id") == key).select(df.columns))
+    want = df.filter(F.col("conv_id") == key)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0

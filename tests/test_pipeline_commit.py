@@ -429,3 +429,28 @@ def test_fresh_encode_job_spark_job_count(spark, df, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("fresh-encode")
     assert stats["n_rows"] == df.count() and not stats["resumed"]
     assert 0 < len(jobs) <= FRESH_ENCODE_JOBS, jobs
+
+
+def test_schema_from_pre_kinds_manifest_falls_back(spark, df, tmp_path):
+    """A manifest written before the ``kinds`` column existed still yields
+    the schema, through the stripes-table distinct."""
+    out = str(tmp_path / "enc_old")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    man = tmp_path / "enc_old" / "manifest"
+    for f in man.glob("part-*.parquet"):
+        pq.write_table(pq.read_table(f).drop_columns(["kinds"]), f)
+    assert "kinds" not in spark.read.parquet(str(man)).columns
+    assert (pipeline.infer_schema_from_manifest(spark, out)
+            == pipeline.infer_schema(pipeline.read_stripes(spark, out)))
+
+
+def test_schema_from_unreadable_manifest_raises(spark, df, tmp_path):
+    """A manifest file that cannot be read is an error, not a silent
+    fallback to the O(stripe rows) stripes distinct."""
+    import pyarrow as pa
+    out = str(tmp_path / "enc_bad")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    for f in (tmp_path / "enc_bad" / "manifest").glob("part-*.parquet"):
+        f.write_bytes(b"\x00not-a-parquet-file")
+    with pytest.raises(pa.ArrowInvalid):
+        pipeline.infer_schema_from_manifest(spark, out)
