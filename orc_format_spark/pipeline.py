@@ -20,31 +20,43 @@ Execution model:
          (no stream bytes) and publishes the manifest, one row per stripe
       3. then the lineage, one row per stripe; each is ONE parquet file
          written under a _-prefixed name and moved into place
-    DECODE: stripes table
-      -> planned on the driver with pyarrow: schema from one manifest
-         ``kinds`` value, key lookups by probing every manifest row's key
-         bloom (no Spark job); a manifest min/max predicate stays a Spark
-         filter over the manifest
-      -> column pruning (filter col_name) and the surviving stripe ids as
-         a literal IN-filter, both pushed down to the parquet scan
-      -> repartition(stripe_id) + sortWithinPartitions   [one shuffle]
-      -> mapInArrow(decode_partition): streams one stripe at a time
+    DECODE (decode_job): manifest -> plan -> stripes files
+      -> planned on the driver with pyarrow: one (stripe_id, file) row per
+         stripe from the manifest, narrowed by the key blooms, a manifest
+         min/max predicate (a Spark filter) and, on compacted or
+         time-travelled tables, the lineage active set; the schema from
+         one manifest ``kinds`` value
+      -> a LocalTableScan of the plan, rows ordered to balance enc_bytes
+      -> mapInArrow(decode_partition): pyarrow reads each stripe's rows
+         from its file (col_name, stripe_id pushed down) and decodes one
+         stripe at a time                                  [no shuffle]
       -> orderBy(sort keys) at comparison time only
+    Stripe rows already in a DataFrame take the same generator after a
+    repartition(stripe_id) + sort (skipped for encode_dataframe's output).
 
 The stripes-as-rows layout is the Spark analog of the reference's
-stripe/stream container (src/read/mod.rs:117-159): locating one column's
-streams becomes a Catalyst filter on ``col_name`` instead of offset math,
-and stripe-granular parallelism falls out of row partitioning.
+stripe/stream container (src/read/mod.rs:117-159): the manifest's
+``file`` column is the footer's stripe directory, and locating one
+column's streams is a ``col_name`` filter instead of offset math.
 """
 
 from __future__ import annotations
 
 import contextlib
 import hashlib
+import heapq
+import os
+import re
 import uuid
 from datetime import datetime, timezone
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -553,7 +565,6 @@ def _estimate_rows(df: DataFrame) -> int | None:
                      f[5:] if f.startswith("file:") else f)
     if not paths:
         return None
-    import pyarrow.parquet as pq
     try:
         if len(paths) <= 64:
             return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
@@ -632,7 +643,6 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     data_cols = list(kinds)
 
     def encode_partition(batches):
-        import pyarrow as pa
         batches = list(batches)
         if not batches:
             return
@@ -641,7 +651,6 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
             return
         b = tbl.column("__bucket").to_numpy()
         s = tbl.column("__salt").to_numpy()
-        import numpy as np
         change = np.flatnonzero((np.diff(b) != 0) | (np.diff(s) != 0)) + 1
         bounds = np.concatenate(([0], change, [len(b)]))
         data = tbl.select(data_cols)
@@ -729,7 +738,6 @@ def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
     decode). Falls back to that distinct only when the manifest has no
     files or no non-null ``kinds`` (pre-``kinds`` tables); a manifest
     file that cannot be read raises."""
-    import pyarrow.dataset as ds
     head = _dataset(out_dir, "manifest", pa.schema([("kinds", pa.string())])
                     ).head(1, filter=ds.field("kinds").is_valid())
     kinds = head["kinds"][0].as_py() if head.num_rows else None
@@ -744,15 +752,72 @@ def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
     return infer_schema(read_stripes(spark, out_dir), columns)
 
 
+def _stripe_chunks(batches, want: list[str]):
+    """(source, Arrow batch) chunks of stripe-column rows: input rows with
+    stream bytes as they are, a plan's stripes read from their files one
+    file at a time (``col_name``, ``stripe_id`` pushed down)."""
+    for b in batches:
+        if "file" not in b.schema.names:
+            yield "the input rows", b
+            continue
+        by_file: dict[str, list[str]] = {}
+        for sid, path in zip(b.column("stripe_id").to_pylist(),
+                             b.column("file").to_pylist()):
+            by_file.setdefault(path, []).append(sid)
+        for path, sids in by_file.items():
+            filesystem, local = _table_fs(path)
+            seen: set[str] = set()
+            for chunk in ds.dataset(local, format="parquet",
+                                    filesystem=filesystem).to_batches(
+                    filter=(ds.field("col_name").isin(want)
+                            & ds.field("stripe_id").isin(sids)),
+                    use_threads=False):
+                seen.update(chunk.column("stripe_id").to_pylist())
+                yield path, chunk
+            if len(seen) < len(sids):
+                raise ValueError(
+                    f"stripes {sorted(set(sids) - seen)[:3]} are planned "
+                    f"from {path} but are not in it")
+
+
+def _stripes(batches, want: list[str]):
+    """Each stripe's rows as dicts, streamed: a stripe's rows arrive
+    contiguously (sorted input, or one stripes file), so a task holds one
+    incoming batch at a time. A stripe that lacks a wanted column raises,
+    naming the stripe and where it was read from."""
+    def complete(key, rows):
+        missing = set(want) - {r["col_name"] for r in rows}
+        if missing:
+            raise ValueError(f"stripe {key[1]} in {key[0]} lacks columns "
+                             f"{sorted(missing)}")
+        return rows
+
+    rows, key = [], None
+    for src, b in _stripe_chunks(batches, want):
+        for r in b.to_pylist():
+            if (src, r["stripe_id"]) != key:
+                if rows:
+                    yield complete(key, rows)
+                rows, key = [], (src, r["stripe_id"])
+            rows.append(r)
+    if rows:
+        yield complete(key, rows)
+
+
 def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
                      schema: T.StructType | None = None,
                      stride_range: tuple | None = None) -> DataFrame:
-    """Decode stripe-column rows back to the original row layout (lazy).
+    """Decode stripes back to the original row layout (lazy), one stripe
+    at a time. ``stripes`` is either a decode plan, one ``(stripe_id,
+    file)`` row per stripe as decode_job builds it (``schema`` required):
+    each task reads its stripes' rows from their files with pyarrow, with
+    no shuffle and no stream bytes through the JVM; or stripe-column rows
+    carrying the stream bytes, re-clustered by a repartition(stripe_id) +
+    sortWithinPartitions unless they are encode_dataframe's own output.
 
-    ``columns`` prunes decode to the named columns — the filter on
-    ``col_name`` is pushed down to the stripes scan by Catalyst, the analog
-    of the reference's read-one-column projection pushdown
-    (src/read/mod.rs:117-159).
+    ``columns`` prunes decode to the named columns: the ``col_name``
+    filter is pushed into the parquet read, the analog of the reference's
+    read-one-column projection pushdown (src/read/mod.rs:117-159).
 
     ``stride_range`` = (col_name, lo, hi): on row-group-indexed stripes,
     decode ONLY the strides whose per-stride [min,max] for that column
@@ -778,154 +843,27 @@ def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
     scan_cols = list(columns)
     if stride_range is not None and stride_range[0] not in scan_cols:
         scan_cols.append(stride_range[0])  # stats live on the predicate col
-    pruned = stripes.filter(F.col("col_name").isin(scan_cols))
-    spark = stripes.sparkSession
-    # When ``stripes`` is the direct output of encode_dataframe it is
-    # already stripe-contiguous per partition (the `_ofs_stripe_clustered`
-    # tag), so the re-clustering exchange below would shuffle the encoded
-    # bytes a second time for nothing — skipping it fuses encode and
-    # decode into ONE stage (scan -> exchange -> sort -> encode kernel ->
-    # col_name filter -> decode kernel); the filter preserves row order,
-    # so per-stripe contiguity still holds. Read-back-from-storage paths
-    # (decode_job et al.) never carry the tag and keep the safe re-shuffle:
-    # same AQE-coalescing consideration as the encode side — stripe rows
-    # are byte-light but expand ~10x on decode, so a parallel task count
-    # is pinned. cores*1, not cores*4: same boundary-cost argument as
-    # _work_partitions (the decode kernel is ~15x cheaper than encode, so
-    # the Arrow boundary dominates even harder here).
-    if not getattr(stripes, "_ofs_stripe_clustered", False):
-        cores = spark.sparkContext.defaultParallelism
-        pruned = (pruned.repartition(cores, "stripe_id")
-                  .sortWithinPartitions("stripe_id"))
-
-    try:  # arrow schema of the decoded output (timestamps carry session tz)
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        target_schema = to_arrow_schema(schema, timezone=tz)
-    except TypeError:
-        target_schema = to_arrow_schema(schema)
+    if "file" not in stripes.columns:
+        clustered = getattr(stripes, "_ofs_stripe_clustered", False)
+        stripes = stripes.filter(F.col("col_name").isin(scan_cols))
+        # encode_dataframe's own output is stripe-contiguous already (its
+        # tag), which fuses encode and decode into ONE stage. Other rows
+        # are clustered on a pinned task count: they expand ~10x on
+        # decode, so AQE's size-based coalescing would serialize them.
+        if not clustered:
+            cores = stripes.sparkSession.sparkContext.defaultParallelism
+            stripes = (stripes.repartition(cores, "stripe_id")
+                       .sortWithinPartitions("stripe_id"))
+    target_schema = to_arrow_schema(schema)
 
     def decode_partition(batches):
-        """STREAMING per-stripe decode: rows arrive sorted by stripe_id
-        (the partition-local sort above), so each stripe is decoded and
-        yielded as soon as its last row has arrived — task memory is
-        bounded by one stripe's rows plus one incoming Arrow batch, not by
-        the whole partition (the encode side bounds its partitions via the
-        STRIPES_PER_PARTITION floor; this is the decode-side analog, and
-        matters at scale where one task may own thousands of stripes)."""
-        import numpy as np
-        import pyarrow as pa
-        pending = None  # rows of the stripe straddling the batch boundary
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([b])
-            if pending is not None:
-                tbl = pa.concat_tables([pending, tbl])
-            ids = tbl.column("stripe_id").combine_chunks().dictionary_encode()
-            codes = np.asarray(ids.indices)
-            change = np.flatnonzero(np.diff(codes) != 0) + 1
-            bounds = np.concatenate(([0], change, [len(codes)]))
-            for i in range(len(bounds) - 2):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                rows = tbl.slice(lo, hi - lo).to_pylist()
-                yield stripe_mod.decode_stripe_arrow(
-                    rows, columns, target_schema, stride_range=stride_range)
-            pending = tbl.slice(int(bounds[-2]))
-        if pending is not None and pending.num_rows:
+        for rows in _stripes(batches, scan_cols):
             yield stripe_mod.decode_stripe_arrow(
-                pending.to_pylist(), columns, target_schema,
-                stride_range=stride_range)
+                rows, columns, target_schema, stride_range=stride_range)
 
-    out = pruned.mapInArrow(decode_partition, schema)
+    out = stripes.mapInArrow(decode_partition, schema)
     if nested_schema is not None:
         out = _reassemble_structs(out, nested_schema)
-    return out
-
-
-def decode_job_clustered(spark: SparkSession, out_dir: str,
-                         columns: list[str] | None = None,
-                         as_of=None) -> DataFrame:
-    """SHUFFLE-FREE decode of a persisted stripes table.
-
-    The encode tasks emit whole stripes (every column of a stripe leaves
-    one task in one batch), so each parquet file under ``stripes/`` holds
-    only complete stripes. This path reads ONE FILE PER TASK with pyarrow
-    (col_name pushdown applied at the parquet row-group level) and decodes
-    partition-locally — zero exchanges, vs decode_job's one shuffle on
-    stripe_id. The completeness invariant is asserted per stripe and a
-    clear error names this function if the table was re-written by
-    something other than commit().
-
-    Crash-window duplicates (the same COMPLETE stripe present in more than
-    one file — an orphan run dir re-encoded under a new run_id, or a
-    replayed foreachBatch append adding a second part file) are resolved by
-    a driver-free ownership pass: each stripe is decoded only from the
-    lexicographically-first file containing it. The ownership scan reads
-    ONLY the stripe_id column (parquet column pruning), and each task's
-    keep-list rides the shuffle as data — nothing is collected.
-
-    At 100 TB this removes the single largest data movement in the read
-    path: the encoded bytes never cross the network at all.
-    """
-    schema, columns = infer_schema_from_manifest(spark, out_dir, columns)
-    # ownership: stripe -> min(file). One cheap job over one skinny column.
-    ids = (spark.read.schema(STRIPE_SCHEMA)
-           .option("basePath", f"{out_dir}/stripes")
-           .parquet(f"{out_dir}/stripes")
-           .select("stripe_id", F.input_file_name().alias("path"))
-           .distinct())
-    owners = ids.groupBy("stripe_id").agg(F.min("path").alias("path"))
-    if as_of is not None or has_compactions(out_dir):
-        act = active_stripe_ids(spark, out_dir, as_of)
-        if act is not None:
-            owners = owners.join(act, "stripe_id", "left_semi")
-    file_keep = owners.groupBy("path").agg(
-        F.collect_list("stripe_id").alias("keep"))
-    cores = spark.sparkContext.defaultParallelism
-    file_keep = file_keep.repartition(cores * 2)
-
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        target_schema = to_arrow_schema(schema, timezone=tz)
-    except TypeError:
-        target_schema = to_arrow_schema(schema)
-    want = list(columns)
-
-    def decode_files(batches):
-        import pyarrow.parquet as pq
-        for b in batches:
-            for p, keep in zip(b.column("path").to_pylist(),
-                               b.column("keep").to_pylist()):
-                local = p[7:] if p.startswith("file://") else p
-                local = local[5:] if local.startswith("file:") else local
-                keep_set = set(keep)
-                tbl = pq.read_table(local, filters=[
-                    ("col_name", "in", want),
-                    ("stripe_id", "in", keep)])
-                rows = tbl.to_pylist()
-                by_stripe: dict[str, list] = {}
-                for r in rows:
-                    by_stripe.setdefault(r["stripe_id"], []).append(r)
-                missing = keep_set - set(by_stripe)
-                for sid, srows in by_stripe.items():
-                    have = {r["col_name"] for r in srows}
-                    if not set(want) <= have:
-                        raise ValueError(
-                            f"stripe {sid} split across files (missing "
-                            f"{set(want) - have}); the stripes table was not "
-                            "written by commit() — use decode_job instead")
-                    yield stripe_mod.decode_stripe_arrow(srows, want,
-                                                         target_schema)
-                if missing:
-                    raise ValueError(
-                        f"owned stripes {sorted(missing)[:3]}... vanished "
-                        f"from {p} between planning and decode")
-
-    out = file_keep.mapInArrow(decode_files, schema)
-    if any(_STRUCT_SEP in c for c in columns):
-        # nested leaves persisted flat: re-nest from the leaf names (same
-        # contract as decode_dataframe's schema-free path)
-        out = _reassemble_structs(out, _nest_schema(schema))
     return out
 
 
@@ -947,7 +885,7 @@ _MANIFEST_HEAD = [
 _LINEAGE_HEAD = [f for f in _MANIFEST_HEAD if f[0] != "kinds"]
 
 
-def _build_manifest(rows: pa.Table, key_col: str | None,
+def _build_manifest(rows: list[dict], key_col: str | None,
                     order_col: str | None) -> pa.Table:
     """Footer-style per-stripe index (the FileMetadata/StripeInformation +
     ColumnStatistics analog, src/proto.rs:206-217,66-87), built from the
@@ -956,10 +894,12 @@ def _build_manifest(rows: pa.Table, key_col: str | None,
     sizes, sorted ``col:codec`` / ``col:kind`` lists, sha1 over the sorted
     ``col:checksum`` list, the key/order columns' min/max (no ``order_*``
     columns without ``order_col``) and the key column's bloom for lookup
-    pruning. Crash-replayed duplicate (stripe_id, col_name) rows count
+    pruning, then ``file``, the stripes file decode reads the stripe from
+    (the lexicographically first, should a replayed append have written
+    it twice). Crash-replayed duplicate (stripe_id, col_name) rows count
     once; nulls are skipped like Spark's max/sum/concat_ws skip them."""
     stripes: dict[str, dict[str, dict]] = {}
-    for r in rows.to_pylist():
+    for r in rows:
         stripes.setdefault(r["stripe_id"], {}).setdefault(r["col_name"], r)
     fields = list(_MANIFEST_HEAD)
     for c, alias in ((key_col, "key"), (order_col, "order")):
@@ -968,6 +908,7 @@ def _build_manifest(rows: pa.Table, key_col: str | None,
                        (f"{alias}_max", pa.string())]
     if key_col:
         fields.append(("key_bloom", pa.binary()))
+    fields.append(("file", pa.string()))
     out = []
     for sid in sorted(stripes):
         cols = stripes[sid]
@@ -994,6 +935,7 @@ def _build_manifest(rows: pa.Table, key_col: str | None,
                 row[f"{alias}_max"] = cols.get(c, {}).get("max_val")
         if key_col:
             row["key_bloom"] = cols.get(key_col, {}).get("bloom")
+        row["file"] = agg(min, "file")
         out.append(row)
     return pa.Table.from_pylist(out, schema=pa.schema(fields))
 
@@ -1027,23 +969,27 @@ def _build_lineage(manifest: pa.Table, run_id: str, params: dict | None,
     return pa.table(cols)
 
 
-def _parquet_files(out_dir: str, table_dir: str) -> tuple:
-    """(filesystem, paths) of the parquet files directly under
-    ``out_dir/table_dir``, skipping ``_``/``.`` names as Spark does (no
-    paths when the directory does not exist)."""
-    from pyarrow import fs as pafs
+def _parquet_files(out_dir: str, table_dir: str,
+                   recursive: bool = False) -> tuple:
+    """(filesystem, sorted paths) of the parquet files under
+    ``out_dir/table_dir``, directly or, with ``recursive``, in its
+    subdirectories too; a ``_``/``.`` name anywhere below ``table_dir``
+    is skipped, as Spark does (no paths when the directory does not
+    exist)."""
     filesystem, base = _table_fs(out_dir)
+    root = f"{base}/{table_dir}"
     infos = filesystem.get_file_info(pafs.FileSelector(
-        f"{base}/{table_dir}", allow_not_found=True))
-    return filesystem, [i.path for i in infos if i.is_file
-                        and not i.base_name.startswith(("_", "."))]
+        root, allow_not_found=True, recursive=recursive))
+    return filesystem, sorted(
+        i.path for i in infos if i.is_file and not any(
+            part.startswith(("_", "."))
+            for part in i.path[len(root) + 1:].split("/")))
 
 
 def _dataset(out_dir: str, table_dir: str, schema: pa.Schema):
     """Driver-side pyarrow dataset of ``schema``'s columns over
     ``out_dir/table_dir`` (empty when nothing is there; a column a file
     lacks reads as nulls)."""
-    import pyarrow.dataset as ds
     filesystem, paths = _parquet_files(out_dir, table_dir)
     return ds.dataset(paths, schema=schema, format="parquet",
                       filesystem=filesystem)
@@ -1053,11 +999,17 @@ def _write_run(stripes: DataFrame, out_dir: str, run_id: str,
                key_col: str | None, order_col: str | None) -> pa.Table:
     """Append ``stripes`` under ``stripes/run=<run_id>`` (the commit's only
     Spark work), then build that run's manifest from ONLY its metadata
-    columns, read back on the driver — O(batch), and no stream bytes."""
+    columns, read back on the driver file by file — O(batch), and no
+    stream bytes — with each row's file relative to ``out_dir``."""
     stripes.write.mode("append").parquet(f"{out_dir}/stripes/run={run_id}")
-    return _build_manifest(
-        _dataset(out_dir, f"stripes/run={run_id}", _RUN_META).to_table(),
-        key_col, order_col)
+    base = _table_fs(out_dir)[1]
+    rows = []
+    for frag in _dataset(out_dir, f"stripes/run={run_id}",
+                         _RUN_META).get_fragments():
+        rel = frag.path[len(base) + 1:]
+        rows += [dict(r, file=rel) for r in
+                 frag.to_table(schema=_RUN_META).to_pylist()]
+    return _build_manifest(rows, key_col, order_col)
 
 
 def _publish(out_dir: str, table_dir: str, tbl: pa.Table,
@@ -1066,7 +1018,6 @@ def _publish(out_dir: str, table_dir: str, tbl: pa.Table,
     under a ``_``-prefixed name that Spark and pyarrow readers skip and
     then moved to a unique ``part-<run_id>-<uuid>.parquet``: readers see
     the whole file or none of it, never a partial one."""
-    import pyarrow.parquet as pq
     filesystem, base = _table_fs(out_dir)
     name = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
     final, tmp = f"{base}/{table_dir}/{name}", f"{base}/{table_dir}/_{name}"
@@ -1170,9 +1121,10 @@ def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
 
 
 def read_stripes(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The full stripes table (all runs). The run= partition column is
-    dropped; orphan rows from a crash between the stripes append and the
-    manifest file are harmless (decode dedupes per stripe-column)."""
+    """The full stripes table (all runs), stream bytes included, as Spark
+    reads it. The run= partition column is dropped. Orphan rows from a
+    crash between the stripes append and the manifest publish are in it;
+    decode_job never reads them, because it plans from the manifest."""
     return (spark.read.schema(STRIPE_SCHEMA)
             .option("basePath", f"{out_dir}/stripes")
             .parquet(f"{out_dir}/stripes")
@@ -1224,7 +1176,6 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
 
     commit(spark, stripes, out_dir, key_col, order_col, run_id, params=params)
 
-    import pyarrow.compute as pc
     sums = ("n_rows", "raw_bytes", "enc_bytes")
     # one row per stripe: a rerun that died between the manifest and the
     # lineage publish re-appends the same manifest rows
@@ -1235,9 +1186,8 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
     if has_compactions(out_dir):
         # tombstoned stripes keep their manifest rows (old snapshots need
         # them) — stats must count only the active set or they double
-        act = active_stripe_ids(spark, out_dir).toArrow()["stripe_id"]
-        man = man.filter(pc.is_in(man["stripe_id"], value_set=(
-            act.combine_chunks().cast(pa.string()))))
+        man = _narrow(man, active_stripe_ids(spark, out_dir)
+                      .toArrow()["stripe_id"])
     return {"run_id": run_id, "resumed": resumed, "n_buckets": n_buckets,
             "n_stripes": man.num_rows,
             **{c: pc.sum(man[f"{c}_first"]).as_py() for c in sums}}
@@ -1269,20 +1219,58 @@ def _bloom_survivors(out_dir: str, key) -> list[str]:
     return list(keep)
 
 
-def _only(df: DataFrame, keep) -> DataFrame:
-    """``df`` narrowed to the stripe ids in ``keep`` (a list, or a
-    DataFrame with a ``stripe_id`` column). Iceberg-style: a listed plan
-    becomes a LITERAL IN-filter that Catalyst pushes into the parquet scan
-    (row-group stats skip the pruned stripes' bytes entirely), where a
-    semi-join would read every stripe's bytes first and filter after. The
-    semi-join is the fallback only for huge survivor sets."""
-    if isinstance(keep, list):
-        if len(keep) <= _MAX_LITERAL_IDS:
-            return df.filter(F.col("stripe_id").isin(keep))
-        keep = df.sparkSession.createDataFrame(
-            [(i,) for i in keep], "stripe_id string")
-    return df.join(F.broadcast(keep.select("stripe_id")), "stripe_id",
-                   "left_semi")
+def _only(df: DataFrame, keep: list[str]) -> DataFrame:
+    """``df`` narrowed to the stripe ids in ``keep``: a LITERAL IN-filter
+    that Catalyst pushes into the parquet scan (row-group stats skip the
+    pruned rows), or, past _MAX_LITERAL_IDS ids, a broadcast semi-join."""
+    if len(keep) <= _MAX_LITERAL_IDS:
+        return df.filter(F.col("stripe_id").isin(keep))
+    ids = df.sparkSession.createDataFrame([(i,) for i in keep],
+                                          "stripe_id string")
+    return df.join(F.broadcast(ids), "stripe_id", "left_semi")
+
+
+def _narrow(tbl: pa.Table, ids) -> pa.Table:
+    """``tbl``'s rows whose stripe_id is in ``ids`` (list or Arrow column)."""
+    ids = (ids.combine_chunks() if isinstance(ids, pa.ChunkedArray)
+           else pa.array(ids, pa.string()))
+    return tbl.filter(pc.is_in(tbl["stripe_id"],
+                               value_set=ids.cast(pa.string())))
+
+
+def _locate(out_dir: str, ids: list[str]) -> dict[str, str]:
+    """Stripe id -> the lexicographically first stripes file holding it,
+    relative to ``out_dir``, from ONLY the stripe_id column of the stripes
+    files: for manifest rows written before the manifest had ``file``."""
+    base = _table_fs(out_dir)[1]
+    filesystem, paths = _parquet_files(out_dir, "stripes", recursive=True)
+    want, found = set(ids), {}
+    for path in paths:
+        held = pq.read_table(path, columns=["stripe_id"],
+                             filesystem=filesystem)["stripe_id"]
+        for sid in pc.unique(held).to_pylist():
+            if sid in want:
+                found.setdefault(sid, path[len(base) + 1:])
+    return found
+
+
+def _balanced(sizes: list[int], p: int) -> list[list[int]]:
+    """Row indices cut into the slices a LocalTableScan of len(sizes) rows
+    runs as tasks (parallelize: min(n, p) contiguous slices, slice i from
+    row i*n//p up to (i+1)*n//p), each filled largest stripe first onto the
+    least-loaded slice with room left, so the tasks' byte shares are about
+    equal."""
+    n = len(sizes)
+    p = max(min(p, n), 1)
+    room = [(i + 1) * n // p - i * n // p for i in range(p)]
+    heap = [(0, i) for i in range(p) if room[i]]
+    slices: list[list[int]] = [[] for _ in range(p)]
+    for j in sorted(range(n), key=lambda j: -sizes[j]):
+        load, i = heapq.heappop(heap)
+        slices[i].append(j)
+        if len(slices[i]) < room[i]:
+            heapq.heappush(heap, (load + sizes[j], i))
+    return slices
 
 
 def decode_job(spark: SparkSession, out_dir: str,
@@ -1290,15 +1278,19 @@ def decode_job(spark: SparkSession, out_dir: str,
                stripe_predicate=None,
                stride_range: tuple | None = None,
                key_equals=None, as_of=None) -> DataFrame:
-    """Read + decode a persisted stripes table. Planning is driver-side,
+    """Read + decode a persisted stripes table, planned from the manifest
     the way an ORC reader plans from its footer (reference
-    src/read/mod.rs:46-159): the schema comes from one manifest ``kinds``
-    value and ``key_equals`` probes every manifest row's key bloom, both
-    read with pyarrow — on a never-compacted table, with no
-    ``stripe_predicate``, building the plan runs no Spark job and Spark
-    runs only the stripes scan and the decode.
+    src/read/mod.rs:46-159): the driver reads each stripe's ``file`` and
+    ``enc_bytes`` with pyarrow and hands decode_dataframe that plan; each
+    task reads its stripes straight from their files, so no shuffle runs,
+    and on a never-compacted table without ``stripe_predicate`` planning
+    runs no Spark job. The schema comes from one manifest ``kinds`` value.
+    Stripes that no manifest row names (a crash before the manifest
+    publish) are never read. Manifest rows from before ``file`` existed
+    are located once per call from the stripes files' stripe_id column.
 
-    ``stripe_predicate`` is a Column over the manifest (e.g.
+    ``key_equals`` keeps the stripes whose manifest key bloom might hold
+    the key. ``stripe_predicate`` is a Column over the manifest (e.g.
     key_min/key_max bounds) that prunes whole stripes before any decode
     work — the Spark analog of the reference's (unused) stats-skipping
     model (src/proto.rs:66-111); it stays a Spark filter over
@@ -1311,29 +1303,45 @@ def decode_job(spark: SparkSession, out_dir: str,
     ``as_of`` (a run_id, or anything castable to timestamp) time-travels to
     that snapshot. Compacted tables always resolve stripe visibility
     through the lineage active set (status ok minus tombstoned); never-
-    compacted tables skip that join entirely — the hot path is unchanged."""
-    stripes = read_stripes(spark, out_dir)
-    if as_of is not None or has_compactions(out_dir):
-        act = active_stripe_ids(spark, out_dir, as_of)
-        if act is not None:
-            stripes = stripes.join(act, "stripe_id", "left_semi")
+    compacted tables skip it."""
+    man = _dataset(out_dir, "manifest", pa.schema([
+        ("stripe_id", pa.string()), ("file", pa.string()),
+        ("enc_bytes", pa.int64())])).to_table()
     keep = None
     if key_equals is not None:
         keep = _bloom_survivors(out_dir, key_equals)
+        man = _narrow(man, keep)
     if stripe_predicate is not None:
-        manifest = read_manifest(spark, out_dir).filter(stripe_predicate)
+        hits = read_manifest(spark, out_dir).filter(stripe_predicate)
         if keep is not None:
-            manifest = _only(manifest, keep)
-        keep = [r["stripe_id"] for r in manifest.select("stripe_id")
-                .limit(_MAX_LITERAL_IDS + 1).collect()]
-        if len(keep) > _MAX_LITERAL_IDS:
-            keep = manifest
-    if keep is not None:
-        stripes = _only(stripes, keep)
-    # schema from one manifest value on the driver: no metadata distinct
-    # over the stripes table runs ahead of the decode
+            hits = _only(hits, keep)
+        man = _narrow(man, hits.select("stripe_id").toArrow()["stripe_id"])
+    if as_of is not None or has_compactions(out_dir):
+        act = active_stripe_ids(spark, out_dir, as_of)
+        if act is not None:
+            man = _narrow(man, act.toArrow()["stripe_id"])
+    man = man.group_by("stripe_id", use_threads=False).aggregate(
+        [("file", "min"), ("enc_bytes", "max")])
+    ids = man["stripe_id"].to_pylist()
+    files = man["file_min"].to_pylist()
+    if None in files:
+        where = _locate(out_dir, [s for s, f in zip(ids, files) if f is None])
+        files = [f or where.get(s) for s, f in zip(ids, files)]
+        if None in files:
+            raise ValueError(
+                f"stripe {ids[files.index(None)]} is in the manifest of "
+                f"{out_dir} but in no stripes file")
+    prefix = out_dir.rstrip("/") if "://" in out_dir else _table_fs(out_dir)[1]
+    order = [j for part in _balanced(
+        pc.fill_null(man["enc_bytes_max"], 0).to_pylist(),
+        spark.sparkContext.defaultParallelism)
+        for j in sorted(part, key=lambda j: (files[j], ids[j]))]
+    plan = spark.createDataFrame(pa.table({
+        "stripe_id": pa.array([ids[j] for j in order], pa.string()),
+        "file": pa.array([f"{prefix}/{files[j]}" for j in order],
+                         pa.string())}))
     schema, columns = infer_schema_from_manifest(spark, out_dir, columns)
-    return decode_dataframe(stripes, columns=columns, schema=schema,
+    return decode_dataframe(plan, columns=columns, schema=schema,
                             stride_range=stride_range)
 
 
@@ -1361,11 +1369,6 @@ def _table_fs(out_dir: str):
     raises instead — silently writing the compaction/expiry markers to a
     local directory named after the URI would make other drivers see the
     table as never-compacted and decode tombstoned stripes (duplicates)."""
-    import os
-    import re
-
-    import pyarrow as pa
-    from pyarrow import fs as pafs
     try:
         return pafs.FileSystem.from_uri(out_dir)
     except pa.ArrowInvalid:
@@ -1386,7 +1389,6 @@ def has_compactions(out_dir: str) -> bool:
     filesystem, base = _table_fs(out_dir)
     if base in _seen_compactions:
         return True
-    from pyarrow import fs as pafs
     sel = pafs.FileSelector(f"{base}/{_COMPACT_MARKER_DIR}",
                             allow_not_found=True)
     found = bool(filesystem.get_file_info(sel))
@@ -1530,7 +1532,6 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     act = active_stripe_ids(spark, out_dir)
     # the active manifest feeds the slot scan AND the tombstone rows;
     # persist so the lineage-resolution joins behind it run once
-    from pyspark import StorageLevel
     man = (read_manifest(spark, out_dir)
            .join(act, "stripe_id", "left_semi")
            .persist(StorageLevel.MEMORY_AND_DISK))
@@ -1544,7 +1545,6 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     # victims feeds three consumers (this count, the source semi-join, the
     # tombstone rows) — persist the skinny id list so the manifest/lineage
     # scan behind it runs once
-    from pyspark import StorageLevel
     victims = victims.persist(StorageLevel.MEMORY_AND_DISK)
     n_victims = victims.count()
     if n_victims == 0:
@@ -1601,7 +1601,6 @@ _EXPIRED_MARKER_DIR = "_expired"
 
 
 def _expired_runs(out_dir: str) -> set[str]:
-    from pyarrow import fs as pafs
     filesystem, base = _table_fs(out_dir)
     sel = pafs.FileSelector(f"{base}/{_EXPIRED_MARKER_DIR}",
                             allow_not_found=True)

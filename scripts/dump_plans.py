@@ -1,7 +1,7 @@
 """Dump the physical plans of the encode and (column-pruned) decode jobs to
 EXPLAIN.md — evidence that the plans are the ones we want: one pinned-width
-Exchange per direction, col_name filter pushed into the stripes parquet scan,
-broadcast semi-join for manifest pruning."""
+Exchange to encode, none in decode_job, col_name filter pushed into the
+stripes parquet scan when Spark reads the stripe rows."""
 
 from __future__ import annotations
 
@@ -35,15 +35,16 @@ def main() -> None:
               "  exactly that partition — deterministic round-robin balance,\n"
               "  see pipeline._partition_probes), a partition-local Sort, then\n"
               "  the Arrow UDF — no other shuffles.\n"
-              "- decode FROM STORAGE: `PushedFilters` containing\n"
-              "  `In(col_name, ...)` at the parquet scan (projection pushdown\n"
-              "  into the stripes table), one Exchange on stripe_id,\n"
-              "  partition-local Sort, Arrow UDF. Decode of an IN-MEMORY\n"
-              "  encode output fuses instead: no second Exchange at all (the\n"
-              "  encode output is already stripe-clustered; the whole\n"
-              "  roundtrip is one stage).\n"
-              "- pruned decode: additional `BroadcastHashJoin ... LeftSemi` from\n"
-              "  the manifest predicate, broadcast (never shuffled).\n\n")
+              "- decode_job: the Arrow UDF over a `LocalTableScan` of the\n"
+              "  driver-built (stripe_id, file) plan, no Exchange; a manifest\n"
+              "  predicate only narrows that plan (it runs as its own small\n"
+              "  job while planning).\n"
+              "- decode of stripe rows Spark read from storage: `PushedFilters`\n"
+              "  containing `In(col_name, ...)` at the parquet scan, one\n"
+              "  Exchange on stripe_id, partition-local Sort, Arrow UDF.\n"
+              "  Decode of an IN-MEMORY encode output fuses instead: no\n"
+              "  second Exchange at all (the encode output is already\n"
+              "  stripe-clustered; the whole roundtrip is one stage).\n\n")
 
     import tempfile
     with tempfile.TemporaryDirectory() as d:
@@ -71,13 +72,13 @@ def main() -> None:
         out.write("## decode_job with manifest stripe pruning\n\n```\n"
                   + plan_of(pruned) + "\n```\n\n")
 
-        clustered = pipeline.decode_job_clustered(spark, d)
-        out.write("## decode_job_clustered (zero data shuffle)\n\n"
-                  "What to look for: the DECODE side is `MapInArrow` over the\n"
-                  "per-file keep-lists — the stripe BYTES never appear in any\n"
-                  "Exchange; the only shuffles belong to the skinny\n"
-                  "(stripe_id, path) ownership aggregation.\n\n```\n"
-                  + plan_of(clustered) + "\n```\n\n")
+        full = pipeline.decode_job(spark, d)
+        out.write("## decode_job (planned from the manifest, no shuffle)\n\n"
+                  "What to look for: `MapInArrow` directly over the\n"
+                  "`LocalTableScan` of the driver-built (stripe_id, file)\n"
+                  "plan — no Exchange anywhere; each task reads its\n"
+                  "stripes' bytes from their files with pyarrow.\n\n```\n"
+                  + plan_of(full) + "\n```\n\n")
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         from orc_format_spark.ops import dedup

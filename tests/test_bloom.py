@@ -151,9 +151,9 @@ def test_scalar_and_batch_probes_agree():
 # ---------------------------------------------------------------------------
 
 # Spark jobs of a full never-compacted-table lookup (decode_job plus a
-# filter and a collect): the stripes scan's shuffle stage and the decode.
-# The plan alone runs none.
-LOOKUP_JOBS = 2
+# filter and a collect): the decode, which reads the planned stripes from
+# their files. The plan alone runs none.
+LOOKUP_JOBS = 1
 
 
 @pytest.fixture(scope="module")
@@ -314,8 +314,9 @@ def test_lookup_spark_job_count(spark, keyed):
 @pytest.mark.parametrize("with_predicate", [False, True])
 def test_lookup_semi_join_fallback(spark, keyed, monkeypatch,
                                    with_predicate):
-    """Past _MAX_LITERAL_IDS survivors the plan narrows the stripes with a
-    broadcast semi-join instead of a literal IN-list: same rows."""
+    """Past _MAX_LITERAL_IDS bloom survivors, the manifest predicate is
+    narrowed with a broadcast semi-join instead of a literal IN-list: same
+    rows."""
     df, out = keyed
     key = df.select("conv_id").first()["conv_id"]
     monkeypatch.setattr(pipeline, "_MAX_LITERAL_IDS", 0)

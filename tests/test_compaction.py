@@ -46,11 +46,9 @@ def test_compact_job_merges_and_roundtrips(spark, fragmented):
     after_active = pipeline.active_stripe_ids(spark, out).count()
     assert after_active < before_active
 
-    # both decode paths: exact same rows, one copy each
+    # exact same rows, one copy each
     got = _sorted_pdf(pipeline.decode_job(spark, out), cols)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
-    gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out), cols)
-    pd.testing.assert_frame_equal(exp, gotc, check_dtype=False)
 
     # lineage: tombstones exist, original 'ok' rows remain (resume safety)
     lineage = spark.read.parquet(f"{out}/lineage")
@@ -116,8 +114,6 @@ def test_crashed_compaction_orphans_stay_invisible(spark, fragmented):
     pipeline._write_compaction_marker(out, orphan_run)
     got = _sorted_pdf(pipeline.decode_job(spark, out), cols)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
-    gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out), cols)
-    pd.testing.assert_frame_equal(exp, gotc, check_dtype=False)
 
 
 def test_stream_replay_after_compaction_is_noop(spark, fragmented):
@@ -218,9 +214,6 @@ def test_expire_snapshots_frees_superseded_runs(spark, tmp_path):
 
     got = _sorted_pdf(pipeline.decode_job(spark, out), df.columns)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
-    gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out),
-                       df.columns)
-    pd.testing.assert_frame_equal(exp, gotc, check_dtype=False)
 
     # time travel into the expired window refuses loudly
     with pytest.raises(ValueError, match="expired"):

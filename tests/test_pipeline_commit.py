@@ -68,15 +68,16 @@ def test_replayed_append_does_not_double_manifest_stats(spark, df, tmp_path):
 
 
 def test_clustered_decode_matches_shuffle_decode(spark, df, tmp_path):
-    """decode_job_clustered (zero data shuffle, one file per task) returns
-    the same multiset as the shuffle decode, and prunes columns."""
+    """decode_job (a manifest plan; each task reads its stripes from their
+    files, no shuffle) returns the same multiset as the shuffle decode of
+    the stripes table read by Spark, and prunes columns."""
     out = str(tmp_path / "enc_clustered")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
-    a = pipeline.decode_job(spark, out)
-    b = pipeline.decode_job_clustered(spark, out)
+    a = pipeline.decode_dataframe(pipeline.read_stripes(spark, out))
+    b = pipeline.decode_job(spark, out)
     assert a.select(a.columns).exceptAll(b.select(a.columns)).count() == 0
     assert b.select(a.columns).exceptAll(a.select(a.columns)).count() == 0
-    pruned = pipeline.decode_job_clustered(spark, out, columns=["conv_id", "turn_idx"])
+    pruned = pipeline.decode_job(spark, out, columns=["conv_id", "turn_idx"])
     assert pruned.columns == ["conv_id", "turn_idx"]
     assert pruned.count() == df.count()
 
@@ -138,14 +139,15 @@ def test_long_string_keys_not_pruned_by_truncated_max(spark, tmp_path):
 def test_clustered_decode_dedupes_stripes_repeated_across_files(spark, df, tmp_path):
     """A stripe COMPLETE in two different files (orphan run dir re-encoded
     under a new run_id after a crash-before-lineage) must decode exactly
-    once: ownership assigns each stripe to its first file."""
+    once: decode reads each stripe from the one file its manifest row
+    names."""
     out = str(tmp_path / "enc_dup")
     stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
                                         stripe_rows=300, n_buckets=6)
     # crash window: the same complete stripes land under TWO run dirs
     pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="runA")
     stripes.write.mode("append").parquet(f"{out}/stripes/run=orphanB")
-    got = pipeline.decode_job_clustered(spark, out)
+    got = pipeline.decode_job(spark, out)
     assert got.count() == df.count()
     exp = df.orderBy("conv_id", "turn_idx").toPandas()
     got_pd = got.orderBy("conv_id", "turn_idx").toPandas()
@@ -153,6 +155,144 @@ def test_clustered_decode_dedupes_stripes_repeated_across_files(spark, df, tmp_p
     pd.testing.assert_frame_equal(exp.reset_index(drop=True),
                                   got_pd[exp.columns.tolist()].reset_index(drop=True),
                                   check_dtype=False)
+
+
+def _assert_decodes_to(got, want):
+    import pandas as pd
+    exp = want.orderBy("conv_id", "turn_idx").toPandas()
+    got_pd = got.orderBy("conv_id", "turn_idx").toPandas()
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(
+        exp.reset_index(drop=True),
+        got_pd[exp.columns.tolist()].reset_index(drop=True),
+        check_dtype=False)
+
+
+def _files_holding(spark, out):
+    """stripe id -> the stripes files (relative to ``out``) that hold it,
+    as Spark's input_file_name() sees them."""
+    held = {}
+    for r in (pipeline.read_stripes(spark, out)
+              .select("stripe_id", F.regexp_extract(
+                  F.input_file_name(), r"(stripes/run=[^/]+/[^/]+)$", 1)
+                  .alias("file")).distinct().collect()):
+        held.setdefault(r["stripe_id"], set()).add(r["file"])
+    return held
+
+
+def test_orphan_run_dir_stays_invisible(spark, df, tmp_path):
+    """Stripes in a run dir that no manifest row names (a crash between
+    the stripes append and the manifest publish) are never decoded, on a
+    table that was never compacted."""
+    out = str(tmp_path / "orphan")
+    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
+                                        stripe_rows=300, n_buckets=6)
+    even = F.col("bucket") % 2 == 0
+    pipeline.commit(spark, stripes.filter(even), out, "conv_id", "turn_idx",
+                    run_id="ok1")
+    stripes.filter(~even).write.mode("append").parquet(
+        f"{out}/stripes/run=crashed")
+    assert not pipeline.has_compactions(out)
+    assert any(f.startswith("stripes/run=crashed/")
+               for fs in _files_holding(spark, out).values() for f in fs)
+    _assert_decodes_to(
+        pipeline.decode_job(spark, out),
+        df.filter(F.pmod(F.xxhash64("conv_id"), F.lit(6)) % 2 == 0))
+
+
+def test_replayed_append_in_one_run_dir_decodes_once(spark, df, tmp_path,
+                                                     monkeypatch):
+    """An append replayed into the same run dir leaves every stripe in two
+    of its files: the manifest names the lexicographically first, the plan
+    lists each stripe once, and decode returns the input once."""
+    out = str(tmp_path / "replay")
+    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
+                                        stripe_rows=300, n_buckets=6)
+    stripes.write.mode("append").parquet(f"{out}/stripes/run=r1")  # crashed
+    pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="r1")
+    held = _files_holding(spark, out)
+    assert held and all(len(fs) == 2 for fs in held.values())
+    man = pq.read_table(f"{out}/manifest").to_pylist()
+    assert {r["stripe_id"]: r["file"] for r in man} == {
+        s: min(fs) for s, fs in held.items()}
+
+    real, handed = pipeline.decode_dataframe, []
+
+    def capture(plan, *a, **kw):
+        handed.append(plan)
+        return real(plan, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "decode_dataframe", capture)
+    got = pipeline.decode_job(spark, out)
+    planned = [r["stripe_id"] for r in handed[0].collect()]
+    assert sorted(planned) == sorted(held)
+    _assert_decodes_to(got, df)
+
+
+def test_manifest_without_file_column_decodes(spark, df, tmp_path):
+    """A manifest written before it recorded each stripe's ``file`` still
+    plans: decode_job locates the stripes from the stripes files and
+    returns the input, for a full scan and a key lookup."""
+    out = str(tmp_path / "legacy")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    man = tmp_path / "legacy" / "manifest"
+    for f in man.glob("part-*.parquet"):
+        pq.write_table(pq.read_table(f).drop_columns(["file"]), f)
+    assert "file" not in spark.read.parquet(str(man)).columns
+    _assert_decodes_to(pipeline.decode_job(spark, out), df)
+    key = df.select("conv_id").first()["conv_id"]
+    _assert_decodes_to(
+        pipeline.decode_job(spark, out, key_equals=key)
+        .filter(F.col("conv_id") == key),
+        df.filter(F.col("conv_id") == key))
+
+
+# Spark jobs of a full-table decode_job(...).count() on a never-compacted
+# table: the decode stage, which ends in the count's partial aggregate, and
+# the final aggregate. The plan is read on the driver.
+DECODE_COUNT_JOBS = 2
+
+
+def test_decode_job_runs_no_shuffle(spark, df, tmp_path):
+    """On a never-compacted table, decode_job's executed plan, for a full
+    scan and a key lookup, is the decode over a LocalTableScan of the plan
+    with no Exchange; a full-table count runs at most DECODE_COUNT_JOBS."""
+    out = str(tmp_path / "noshuffle")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    key = df.select("conv_id").first()["conv_id"]
+    for dec in (pipeline.decode_job(spark, out),
+                pipeline.decode_job(spark, out, key_equals=key)):
+        assert dec.count() > 0
+        plan = dec._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Exchange" not in plan, plan
+
+    sc = spark.sparkContext
+    sc.setJobGroup("full-decode", "decode_job(...).count()")
+    try:
+        n = pipeline.decode_job(spark, out).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("full-decode")
+    assert n == df.count()
+    assert 0 < len(jobs) <= DECODE_COUNT_JOBS, jobs
+
+
+def test_plan_order_balances_local_table_scan_tasks(spark):
+    """_balanced's slices are exactly the rows each task of the plan's
+    LocalTableScan gets, and the largest stripes land on different tasks
+    (each task's enc_bytes within one stripe of the mean)."""
+    import pyarrow as pa
+    p = spark.sparkContext.defaultParallelism
+    sizes = [(j * 7919) % 1000 + (5000 if j < p else 0) for j in range(50)]
+    slices = pipeline._balanced(sizes, p)
+    plan = spark.createDataFrame(pa.table({"j": [j for s in slices
+                                                 for j in s]}))
+    tasks = plan.rdd.glom().map(lambda rows: sorted(r.j for r in rows))
+    assert tasks.collect() == [sorted(s) for s in slices]
+    loads = [sum(sizes[j] for j in s) for s in slices]
+    assert max(loads) - min(loads) <= max(sizes)
+    assert sorted(max(s, key=sizes.__getitem__) for s in slices) == list(
+        range(p))
 
 
 def test_resume_layout_param_mismatch_raises(spark, df, tmp_path):
@@ -186,7 +326,7 @@ def test_infer_schema_from_manifest_single_row(spark, df, tmp_path):
 
 def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
     """A persisted NESTED table (rich transcripts tool_calls) decodes
-    through the shuffle-free clustered path with the nested column
+    through decode_job's shuffle-free file reads with the nested column
     re-nested — and a top-level nested name prunes to its leaves."""
     out = str(tmp_path / "rich")
     rich = transcripts.enrich(df)
@@ -194,7 +334,7 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
                                         stripe_rows=300, n_buckets=6)
     pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="n1")
 
-    dec = pipeline.decode_job_clustered(spark, out)
+    dec = pipeline.decode_job(spark, out)
     # schema-free re-nest: struct fields come back in sorted-leaf order;
     # the SHAPE must be array<struct<...>> with all three fields
     dt = dec.schema["tool_calls"].dataType.simpleString()
@@ -212,7 +352,7 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
     assert got == exp
 
     # column pruning by the nested TOP-LEVEL name
-    pruned = pipeline.decode_job_clustered(
+    pruned = pipeline.decode_job(
         spark, out, columns=["conv_id", "turn_idx", "tool_calls"])
     assert set(pruned.columns) == {"conv_id", "turn_idx", "tool_calls"}
     got_p = {(r["conv_id"], r["turn_idx"]):
@@ -276,7 +416,8 @@ def test_balanced_encode_placement(spark):
 
 def _spark_manifest_oracle(written, key_col, order_col):
     """The manifest as a Spark groupBy over the stripe-column rows: the
-    reference the driver-built manifest is checked against."""
+    reference the driver-built manifest is checked against. ``written``
+    carries each row's ``file``, relative to the table directory."""
     aggs = [
         F.max("bucket").alias("bucket"),
         F.max("n_rows").alias("n_rows"),
@@ -300,8 +441,9 @@ def _spark_manifest_oracle(written, key_col, order_col):
         aggs.append(F.first(F.when(F.col("col_name") == key_col,
                                    F.col("bloom")),
                             ignorenulls=True).alias("key_bloom"))
+    files = written.groupBy("stripe_id").agg(F.min("file").alias("file"))
     return (written.dropDuplicates(["stripe_id", "col_name"])
-            .groupBy("stripe_id").agg(*aggs))
+            .groupBy("stripe_id").agg(*aggs).join(files, "stripe_id"))
 
 
 LINEAGE_SCHEMA = T.StructType([
@@ -329,8 +471,9 @@ LINEAGE_SCHEMA = T.StructType([
 @pytest.mark.parametrize("table", ["keyed", "no_order", "nested"])
 def test_driver_manifest_matches_spark_groupby(spark, df, tmp_path, table):
     """The manifest commit builds on the driver equals the Spark groupBy
-    oracle row for row (sha1 checksums, key/order min/max, key bloom), in
-    the same column order; without order_col there are no order_* columns.
+    oracle row for row (sha1 checksums, key/order min/max, key bloom, and
+    the file each stripe is in, against input_file_name()), in the same
+    column order; without order_col there are no order_* columns.
     The lineage reads back with exactly the Spark-written schema: column
     order, a timestamp committed_at shared by the whole commit, and typed
     string nulls for unset params."""
@@ -347,8 +490,10 @@ def test_driver_manifest_matches_spark_groupby(spark, df, tmp_path, table):
                     params=params)
 
     got = spark.read.parquet(f"{out}/manifest")
-    exp = _spark_manifest_oracle(pipeline.read_stripes(spark, out),
-                                 "conv_id", order_col)
+    written = pipeline.read_stripes(spark, out).withColumn(
+        "file", F.regexp_extract(F.input_file_name(),
+                                 r"(stripes/run=[^/]+/[^/]+)$", 1))
+    exp = _spark_manifest_oracle(written, "conv_id", order_col)
     assert got.columns == exp.columns
     assert ("order_min" in got.columns) == (order_col is not None)
     assert got.schema.simpleString() == exp.schema.simpleString()
